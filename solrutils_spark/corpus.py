@@ -168,11 +168,6 @@ def synth_corpus(
     return base.mapInPandas(gen, schema=schema)
 
 
-def synth_corpus_local(n_rows: int, *, hot_repeat: int = 2_000) -> pd.DataFrame:
-    """Driver-side corpus for the pure-Python oracle (tiny sizes only)."""
-    return _rows_pdf(np.arange(n_rows), hot_repeat)
-
-
 def reference_queries() -> list[tuple[int, str, int]]:
     """(query_id, query_text, top_k) — FIXTURES.md §2 reference query set."""
     qs: list[tuple[int, str, int]] = []

@@ -53,8 +53,9 @@ from pyspark.sql import functions as F
 
 from solrutils_spark.functions.analyzer import B, K1, analyze, analyze_series
 from solrutils_spark.index.codec import decode_run
-
-TOPK_DDL = "doc_id long, score double"
+from solrutils_spark.query.engine import (BATCH_DDL, TOPK_DDL, batch_frame,
+                                           union_doc_ids)
+from solrutils_spark.query.wand import isin_sorted
 
 
 class TooManyClauses(ValueError):
@@ -132,11 +133,7 @@ def conj_slice(
     for term, rlist in ordered:
         parts: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
         for r in rlist:
-            payload = (
-                r.payload
-                if isinstance(r.payload, np.ndarray)
-                else np.frombuffer(r.payload, dtype=np.uint8)
-            )
+            payload = np.frombuffer(r.payload, dtype=np.uint8)
             bo = np.asarray(r.block_offset, dtype=np.int64)
             bl = np.asarray(r.block_last, dtype=np.int64)
             if cand is None:
@@ -159,11 +156,7 @@ def conj_slice(
             return _EMPTY
         if cand is None:
             if allowed_docs is not None:
-                pos = np.searchsorted(allowed_docs, d)
-                if allowed_docs.size == 0:
-                    return _EMPTY
-                ok = pos < allowed_docs.size
-                ok &= allowed_docs[np.minimum(pos, allowed_docs.size - 1)] == d
+                ok = isin_sorted(allowed_docs, d)
                 d, tf, dl = d[ok], tf[ok], dl[ok]
                 if d.size == 0:
                     return _EMPTY
@@ -213,11 +206,7 @@ def scored_matches_slice(
     ds: list[np.ndarray] = []
     cs: list[np.ndarray] = []
     for r in rows:
-        payload = (
-            r.payload
-            if isinstance(r.payload, np.ndarray)
-            else np.frombuffer(r.payload, dtype=np.uint8)
-        )
+        payload = np.frombuffer(r.payload, dtype=np.uint8)
         bo = np.asarray(r.block_offset, dtype=np.int64)
         d, tf, dl = decode_run(payload, int(r.df_part), bo, 0, len(bo), 0)
         ds.append(d)
@@ -264,39 +253,14 @@ def search_conj(
     avgdl = float(reader.stats["avgdl"])
     fetch_k = k + offset
     n_terms = len(terms)
-    cand = reader._candidate_rows(terms)
 
-    if filter_df is not None:
-        fids = reader._aligned_filter(filter_df)
+    def kernel(rows, allowed) -> pd.DataFrame:
+        d, s = topk_conj(rows, idf_by_term, avgdl, fetch_k, n_terms,
+                         allowed_docs=allowed)
+        return pd.DataFrame({"doc_id": d, "score": s})
 
-        def ckernel(cand_pdf: pd.DataFrame, fid_pdf: pd.DataFrame) -> pd.DataFrame:
-            if cand_pdf.empty or fid_pdf.empty:
-                return pd.DataFrame(
-                    {"doc_id": pd.Series(dtype="int64"),
-                     "score": pd.Series(dtype="float64")}
-                )
-            allowed = np.sort(fid_pdf["doc_id"].to_numpy(np.int64))
-            d, s = topk_conj(
-                list(cand_pdf.itertuples(index=False)), idf_by_term, avgdl,
-                fetch_k, n_terms, allowed_docs=allowed,
-            )
-            return pd.DataFrame({"doc_id": d, "score": s})
-
-        sliced = (
-            cand.groupBy("salt")
-            .cogroup(fids.groupBy("salt"))
-            .applyInPandas(ckernel, schema=TOPK_DDL)
-        )
-    else:
-
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            d, s = topk_conj(
-                list(pdf.itertuples(index=False)), idf_by_term, avgdl,
-                fetch_k, n_terms,
-            )
-            return pd.DataFrame({"doc_id": d, "score": s})
-
-        sliced = cand.groupBy("salt").applyInPandas(kernel, schema=TOPK_DDL)
+    sliced = reader._per_salt(reader._candidate_rows(terms), kernel, TOPK_DDL,
+                              filter_df=filter_df)
     ranked = sliced.orderBy(F.desc("score"), F.asc("doc_id")).limit(fetch_k)
     if offset:
         ranked = ranked.offset(offset)
@@ -327,43 +291,27 @@ def search_conj_batch(reader, queries: list[tuple[int, str, int]]) -> DataFrame:
         # MUST semantics: any dead term ⇒ the query matches nothing
         if terms and all(dfs.get(t) for t in terms):
             plans.append((qid, {t: reader.idf(dfs[t]) for t in terms}, k))
-    BATCH_DDL = "query_id long, doc_id long, score double"
     if not plans:
-        return reader.spark.createDataFrame(
-            [], BATCH_DDL + ", rank int"
-        )
+        return reader.spark.createDataFrame([], BATCH_DDL + ", rank int")
     avgdl = float(reader.stats["avgdl"])
     live_terms = sorted({t for _, idfs, _ in plans for t in idfs})
-    cand = reader._candidate_rows(live_terms)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(rows, _allowed) -> pd.DataFrame:
         rows_by_term: dict[str, list] = {}
-        for r in pdf.itertuples(index=False):
+        for r in rows:
             rows_by_term.setdefault(r.term, []).append(r)
-        live = []
+        results = []
         for qid, idf_by_term, k in plans:
             if any(t not in rows_by_term for t in idf_by_term):
                 continue  # slice lacks a term ⇒ no conjunctive match here
-            rows = [r for t in idf_by_term for r in rows_by_term[t]]
-            d, s = topk_conj(rows, idf_by_term, avgdl, k,
+            q_rows = [r for t in idf_by_term for r in rows_by_term[t]]
+            d, s = topk_conj(q_rows, idf_by_term, avgdl, k,
                              n_terms=len(idf_by_term))
-            if d.size:
-                live.append((qid, d, s))
-        if not live:
-            return pd.DataFrame(
-                {"query_id": [], "doc_id": [], "score": []}
-            ).astype({"query_id": "int64", "doc_id": "int64",
-                      "score": "float64"})
-        qids = np.concatenate(
-            [np.full(d.size, qid, dtype=np.int64) for qid, d, _ in live]
-        )
-        return pd.DataFrame(
-            {"query_id": qids,
-             "doc_id": np.concatenate([d for _, d, _ in live]),
-             "score": np.concatenate([s for _, _, s in live])}
-        )
+            results.append((qid, d, s))
+        return batch_frame(results)
 
-    sliced = cand.groupBy("salt").applyInPandas(kernel, BATCH_DDL)
+    sliced = reader._per_salt(reader._candidate_rows(live_terms), kernel,
+                              BATCH_DDL)
     k_df = reader.spark.createDataFrame(
         [(qid, k) for qid, _, k in plans], "query_id long, k int"
     )
@@ -388,15 +336,12 @@ def conj_matches(reader, terms: list[str]) -> DataFrame:
         return reader.spark.createDataFrame([], "doc_id long")
     avgdl = float(reader.stats["avgdl"])
     n_terms = len(terms)
-    cand = reader._candidate_rows(terms)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        d, _ = conj_slice(
-            list(pdf.itertuples(index=False)), idf_by_term, avgdl, n_terms
-        )
+    def kernel(rows, _allowed) -> pd.DataFrame:
+        d, _ = conj_slice(rows, idf_by_term, avgdl, n_terms)
         return pd.DataFrame({"doc_id": d})
 
-    return cand.groupBy("salt").applyInPandas(kernel, "doc_id long")
+    return reader._per_salt(reader._candidate_rows(terms), kernel, "doc_id long")
 
 
 def scored_matches(reader, terms: list[str]) -> DataFrame:
@@ -407,22 +352,15 @@ def scored_matches(reader, terms: list[str]) -> DataFrame:
     if not live:
         return reader.spark.createDataFrame([], TOPK_DDL)
     avgdl = float(reader.stats["avgdl"])
-    cand = reader._candidate_rows(live)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        d, s = scored_matches_slice(
-            list(pdf.itertuples(index=False)), idf_by_term, avgdl
-        )
+    def kernel(rows, _allowed) -> pd.DataFrame:
+        d, s = scored_matches_slice(rows, idf_by_term, avgdl)
         return pd.DataFrame({"doc_id": d, "score": s})
 
-    return cand.groupBy("salt").applyInPandas(kernel, TOPK_DDL)
+    return reader._per_salt(reader._candidate_rows(live), kernel, TOPK_DDL)
 
 
 # --------------------------------------------------------------- phrase ----
-
-
-class UnsupportedQueryFeature(ValueError):
-    """Query combines features outside the supported semantics (loud gate)."""
 
 
 def _phrase_freq(toks: list[str], seq: list[str]) -> int:
@@ -578,11 +516,7 @@ def phrase_slice(
         rlist = sorted(rlist, key=lambda r: int(r.first_doc))
         d_parts, tf_parts, dl_parts, pos_parts = [], [], [], []
         for r in rlist:
-            payload = (
-                r.payload
-                if isinstance(r.payload, np.ndarray)
-                else np.frombuffer(r.payload, dtype=np.uint8)
-            )
+            payload = np.frombuffer(r.payload, dtype=np.uint8)
             bo = np.asarray(r.block_offset, dtype=np.int64)
             bl = np.asarray(r.block_last, dtype=np.int64)
             pos_bo = np.asarray(r.pos_block_offset, dtype=np.int64)
@@ -592,11 +526,7 @@ def phrase_slice(
                     "index mixes pre-positions segments; rebuild it "
                     "(resume=False) or query via candidate-verify"
                 )
-            pos_payload = (
-                r.pos_payload
-                if isinstance(r.pos_payload, np.ndarray)
-                else np.frombuffer(r.pos_payload, dtype=np.uint8)
-            )
+            pos_payload = np.frombuffer(r.pos_payload, dtype=np.uint8)
             runs = (
                 [(0, len(bo))]
                 if cand is None
@@ -725,17 +655,14 @@ def phrase_scored(reader, phrase_text: str, slop: int = 0) -> DataFrame:
     avgdl = float(reader.stats["avgdl"])
 
     if reader.has_positions():
-        cand_rows = reader._candidate_rows_with_positions(uniq)
         seq_l, slop_l = list(seq), slop
 
-        def pkernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            d, s = phrase_slice(
-                list(pdf.itertuples(index=False)), seq_l, idf_by_term,
-                avgdl, slop_l,
-            )
+        def pkernel(rows, _allowed) -> pd.DataFrame:
+            d, s = phrase_slice(rows, seq_l, idf_by_term, avgdl, slop_l)
             return pd.DataFrame({"doc_id": d, "score": s})
 
-        return cand_rows.groupBy("salt").applyInPandas(pkernel, TOPK_DDL)
+        return reader._per_salt(reader._candidate_rows_with_positions(uniq),
+                                pkernel, TOPK_DDL)
 
     cand = conj_matches(reader, uniq)
     # docs ⋈ candidates: candidates ≪ corpus (bounded by the rarest term's
@@ -874,25 +801,14 @@ def multi_term_docs(reader, terms: list[str]) -> DataFrame:
     live = sorted(t for t, d in dfs.items() if d)
     if not live:
         return reader.spark.createDataFrame([], TOPK_DDL)
-    cand = reader._candidate_rows(live)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        from solrutils_spark.index.codec import decode_postings
-
-        out = []
-        for row in pdf.itertuples(index=False):
-            payload = np.frombuffer(row.payload, dtype=np.uint8)
-            d, _, _ = decode_postings(
-                int(row.df_part), payload, np.asarray(row.block_offset),
-                np.asarray(row.block_last),
-            )
-            out.append(d)
-        docs = np.unique(np.concatenate(out)) if out else np.empty(0, np.int64)
+    def kernel(rows, _allowed) -> pd.DataFrame:
+        docs = union_doc_ids(rows)
         return pd.DataFrame(
             {"doc_id": docs, "score": np.ones(docs.size, dtype=np.float64)}
         )
 
-    return cand.groupBy("salt").applyInPandas(kernel, TOPK_DDL)
+    return reader._per_salt(reader._candidate_rows(live), kernel, TOPK_DDL)
 
 
 def prefix_search(

@@ -8,7 +8,9 @@ Query lifecycle (the Spark twin of SURVEY.md §3.1's Solr crossing):
    for surviving rows (Parquet column/predicate pushdown)
 3. global df per term = sum of row-level ``df_part`` (metadata-only pass,
    payload column never touched — column pruning does this for free)
-4. score: per-salt-slice block-max WAND kernel in ``applyInPandas``
+4. score: ``wand.topk_rows``, the block-max WAND kernel, once per salt
+   slice inside ``applyInPandas`` (dispatched by ``IndexReader._per_salt``,
+   the one per-salt entry point of every distributed kernel)
 5. merge: ``orderBy(score desc, doc_id).limit(k)`` over ≤ slices·k rows
    (TakeOrderedAndProject — never a full sort)
 6. optional stored-field fetch: broadcast join of the tiny top-k against the
@@ -33,7 +35,9 @@ and block upper bounds remain valid for any doc — rank-identical (pinned).
 from __future__ import annotations
 
 import math
+from collections import OrderedDict
 from pathlib import Path
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -41,11 +45,51 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from solrutils_spark.index.builder import read_docs, read_stats
+from solrutils_spark.index.codec import decode_postings
 from solrutils_spark.index.merge import read_index, term_bucket
 from solrutils_spark.query.exact import query_terms
-from solrutils_spark.query.wand import topk_rows, topk_slice, topk_slice_batch
+from solrutils_spark.query import wand
+# engine-level name for ``search_local`` only: Spark closures call
+# ``wand.topk_rows`` so a caller patching this name (tracing) never ships
+# the patch into tasks
+from solrutils_spark.query.wand import topk_rows
 
 TOPK_DDL = "doc_id long, score double"
+BATCH_DDL = "query_id long, doc_id long, score double"
+_PD_DTYPES = {"long": "int64", "double": "float64"}
+
+
+def _empty_frame(ddl: str) -> pd.DataFrame:
+    """Zero-row pandas frame with the dtypes of a ``"name type, …"`` DDL."""
+    cols = (c.split() for c in ddl.split(","))
+    return pd.DataFrame({n: pd.Series(dtype=_PD_DTYPES[t]) for n, t in cols})
+
+
+def batch_frame(results) -> pd.DataFrame:
+    """[(query_id, doc_ids, scores)] → ONE ``BATCH_DDL`` frame per slice
+    from concatenated numpy arrays — a per-query pd.DataFrame + pd.concat
+    costs ~20-50 µs × |queries| × 64 slices per job, a measurable slice of
+    the batch's per-query marginal cost at 1M docs."""
+    live = [(qid, d, s) for qid, d, s in results if d.size]
+    if not live:
+        return _empty_frame(BATCH_DDL)
+    return pd.DataFrame({
+        "query_id": np.concatenate(
+            [np.full(d.size, qid, dtype=np.int64) for qid, d, _ in live]),
+        "doc_id": np.concatenate([d for _, d, _ in live]),
+        "score": np.concatenate([s for _, _, s in live]),
+    })
+
+
+def union_doc_ids(rows) -> np.ndarray:
+    """Sorted unique doc_ids of posting-row records — every posting
+    decoded, nothing scored (the unscored OR domain of one salt slice)."""
+    out = [
+        decode_postings(int(r.df_part), np.frombuffer(r.payload, dtype=np.uint8),
+                        np.asarray(r.block_offset), np.asarray(r.block_last))[0]
+        for r in rows
+    ]
+    return np.unique(np.concatenate(out)) if out else np.empty(0, np.int64)
 
 
 class _PostingRow:
@@ -54,6 +98,14 @@ class _PostingRow:
 
     __slots__ = ("term", "salt", "df_part", "first_doc", "payload",
                  "block_offset", "block_last", "block_max_tf", "block_min_dl")
+
+
+class _AlignedFilter(NamedTuple):
+    """One filter-alignment cache entry (see ``_aligned_filter``)."""
+
+    source: DataFrame   # the caller's frame: pins id() while cached
+    aligned: DataFrame  # salted ids co-partitioned with the serving cache
+    owned: bool         # persisted by the reader: eviction unpersists it
 
 
 _SLICED_FALLBACKS = 0  # observability: serving reads should NEVER be sliced
@@ -121,11 +173,9 @@ class IndexReader:
         self._bucket_datasets: dict[int, object] = {}
         self._has_positions: bool | None = None
         self._serving_partitions: int | None = None
-        # filter-alignment cache: id(filter_df) → (source ref, aligned df).
+        # filter-alignment cache: id(filter_df) → _AlignedFilter.
         # Bounded LRU; see _aligned_filter.
-        from collections import OrderedDict
-
-        self._filter_align_cache: "OrderedDict[int, tuple]" = OrderedDict()
+        self._filter_align_cache: "OrderedDict[int, _AlignedFilter]" = OrderedDict()
         self._filter_align_max = 8
 
     @property
@@ -138,13 +188,13 @@ class IndexReader:
                           sort_for_pruning: bool = False) -> "IndexReader":
         """Hot-index mode: repartition the postings by ``salt`` and persist.
 
-        Every scored query stage is ``groupBy("salt").applyInPandas(...)``;
-        with the cache already hash-partitioned on salt, Catalyst elides the
-        per-query Exchange (ClusteredDistribution is satisfied by the cached
-        partitioning for ANY partition count) — repeated queries shuffle
-        ZERO bytes and go straight from cache scan to kernel. The cluster
-        twin is a salt-bucketed index table kept resident on the serving
-        executors.
+        Every scored query stage groups the candidate rows by ``salt``
+        (:meth:`_per_salt`); with the cache already hash-partitioned on
+        salt, Catalyst elides the per-query Exchange (ClusteredDistribution
+        is satisfied by the cached partitioning for ANY partition count) —
+        repeated queries shuffle ZERO bytes and go straight from cache scan
+        to kernel. The cluster twin is a salt-bucketed index table kept
+        resident on the serving executors.
 
         ``num_partitions``: tuning knob for the cached partition count.
         Default (round 6): ``min(4 · num_salts, spark.sql.shuffle.partitions)``
@@ -196,8 +246,18 @@ class IndexReader:
             part = part.sortWithinPartitions("bucket", "term")
         self.index = part.persist()
         self.index.count()
+        if int(num_partitions) != self._serving_partitions:
+            # aligned filters were co-partitioned for the OLD count: each
+            # would now force the per-query exchange they exist to elide
+            self._drop_aligned_filters()
         self._serving_partitions = int(num_partitions)
         return self
+
+    def _drop_aligned_filters(self) -> None:
+        for entry in self._filter_align_cache.values():
+            if entry.owned:
+                entry.aligned.unpersist()
+        self._filter_align_cache.clear()
 
     def idf(self, df: int) -> float:
         n = self.stats["n_docs"]
@@ -323,15 +383,15 @@ class IndexReader:
         at most ``_filter_align_max`` aligned domains are resident, eviction
         unpersists. On a correctly co-partitioned cluster deployment the
         counts match and this cache never engages (zero extra memory)."""
-        fids = self.salted_filter(filter_df)
         n = self._serving_partitions
         if n is None:
-            return fids
+            return self.salted_filter(filter_df)
         key = id(filter_df)
         hit = self._filter_align_cache.pop(key, None)
         if hit is not None:
             self._filter_align_cache[key] = hit  # re-insert → most recent
-            return hit[1]
+            return hit.aligned
+        fids = self.salted_filter(filter_df)
         try:
             cur = fids.rdd.getNumPartitions()
         except Exception:
@@ -343,15 +403,58 @@ class IndexReader:
             aligned, owned = fids, False
         else:
             aligned, owned = fids.repartition(n, "salt").persist(), True
-        # the source ref pins the caller's frame so id() stays unique for
-        # the cache entry's lifetime; `owned` marks frames WE persisted
-        # (eviction must not unpersist a caller's own cache)
-        self._filter_align_cache[key] = (filter_df, aligned, owned)
+        # eviction must not unpersist a caller's own cache (owned=False)
+        self._filter_align_cache[key] = _AlignedFilter(filter_df, aligned, owned)
         if len(self._filter_align_cache) > self._filter_align_max:
             _, old = self._filter_align_cache.popitem(last=False)
-            if old[2]:
-                old[1].unpersist()
+            if old.owned:
+                old.aligned.unpersist()
         return aligned
+
+    def _per_salt(self, cand: DataFrame, fn, schema: str, *,
+                  filter_df: DataFrame | None = None,
+                  filter_doc_ids: list[int] | None = None) -> DataFrame:
+        """Run ``fn(rows, allowed)`` on every salt slice of the candidate
+        rows ``cand`` and union the pandas frames it returns (``schema``
+        DDL) — the one dispatch of every per-salt kernel.
+
+        ``rows`` are the slice's posting-row records (pandas ``itertuples``);
+        ``allowed`` is the slice's sorted int64 allowed doc_ids, or None
+        when unfiltered:
+
+        - ``filter_df``: the salted ids, co-partitioned by
+          :meth:`_aligned_filter`, are COGROUPed with the candidates by
+          salt; a slice with no candidate row or no allowed id yields no
+          rows and never reaches ``fn``;
+        - ``filter_doc_ids``: one sorted array shipped with the closure to
+          every slice.
+
+        ``fn`` must not close over the reader (it is pickled into tasks)."""
+        if filter_df is not None:
+            fids = self._aligned_filter(filter_df)
+            empty = _empty_frame(schema)
+
+            def ckernel(cand_pdf: pd.DataFrame, fid_pdf: pd.DataFrame) -> pd.DataFrame:
+                if cand_pdf.empty or fid_pdf.empty:
+                    return empty
+                allowed = np.sort(fid_pdf["doc_id"].to_numpy(np.int64))
+                return fn(list(cand_pdf.itertuples(index=False)), allowed)
+
+            return (
+                cand.groupBy("salt")
+                .cogroup(fids.groupBy("salt"))
+                .applyInPandas(ckernel, schema)
+            )
+        allowed = (
+            np.sort(np.asarray(filter_doc_ids, dtype=np.int64))
+            if filter_doc_ids is not None
+            else None
+        )
+
+        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+            return fn(list(pdf.itertuples(index=False)), allowed)
+
+        return cand.groupBy("salt").applyInPandas(kernel, schema)
 
     def search(
         self,
@@ -378,44 +481,14 @@ class IndexReader:
         idf_by_term = {t: self.idf(dfs[t]) for t in terms}
         avgdl = float(self.stats["avgdl"])
         fetch_k = k + offset
-        cand = self._candidate_rows(terms)
 
-        if filter_df is not None:
-            fids = self._aligned_filter(filter_df)
+        def kernel(rows, allowed) -> pd.DataFrame:
+            d, s = wand.topk_rows(rows, idf_by_term, avgdl, fetch_k,
+                                  use_wand=use_wand, allowed_docs=allowed)
+            return pd.DataFrame({"doc_id": d, "score": s})
 
-            def ckernel(cand_pdf: pd.DataFrame, fid_pdf: pd.DataFrame) -> pd.DataFrame:
-                if cand_pdf.empty or fid_pdf.empty:
-                    return pd.DataFrame(
-                        {"doc_id": pd.Series(dtype="int64"),
-                         "score": pd.Series(dtype="float64")}
-                    )
-                allowed_local = np.sort(fid_pdf["doc_id"].to_numpy(np.int64))
-                d, s = topk_slice(
-                    cand_pdf, idf_by_term, avgdl, fetch_k,
-                    use_wand=use_wand, allowed_docs=allowed_local,
-                )
-                return pd.DataFrame({"doc_id": d, "score": s})
-
-            sliced = (
-                cand.groupBy("salt")
-                .cogroup(fids.groupBy("salt"))
-                .applyInPandas(ckernel, schema=TOPK_DDL)
-            )
-        else:
-            allowed = (
-                np.sort(np.asarray(filter_doc_ids, dtype=np.int64))
-                if filter_doc_ids is not None
-                else None
-            )
-
-            def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-                d, s = topk_slice(
-                    pdf, idf_by_term, avgdl, fetch_k,
-                    use_wand=use_wand, allowed_docs=allowed,
-                )
-                return pd.DataFrame({"doc_id": d, "score": s})
-
-            sliced = cand.groupBy("salt").applyInPandas(kernel, schema=TOPK_DDL)
+        sliced = self._per_salt(self._candidate_rows(terms), kernel, TOPK_DDL,
+                                filter_df=filter_df, filter_doc_ids=filter_doc_ids)
         ranked = sliced.orderBy(F.desc("score"), F.asc("doc_id")).limit(fetch_k)
         if offset:
             ranked = ranked.offset(offset)
@@ -463,7 +536,8 @@ class IndexReader:
         candidate rows for the UNION of all query terms are fetched once,
         each salt-slice scores every query locally (shared decode within the
         slice), and a per-query window takes global top-k. Per-query results
-        are rank-identical to :meth:`search` (same kernel, same stats).
+        are rank-identical to :meth:`search` (same stats, same term order;
+        ``wand.topk_slice_batch`` is the exhaustive shared-decode kernel).
 
         ``filter_df``: optional single-column DataFrame of allowed doc_ids
         applied to EVERY query in the batch (P2 semantics — restrict, never
@@ -483,55 +557,15 @@ class IndexReader:
             if terms:
                 plans.append((qid, {t: self.idf(dfs[t]) for t in terms}, k))
         if not plans:
-            return self.spark.createDataFrame(
-                [], "query_id long, doc_id long, score double, rank int"
-            )
+            return self.spark.createDataFrame([], BATCH_DDL + ", rank int")
         avgdl = float(self.stats["avgdl"])
         live_terms = sorted({t for _, idfs, _ in plans for t in idfs})
-        BATCH_DDL = "query_id long, doc_id long, score double"
 
-        def _rows(results) -> pd.DataFrame:
-            # ONE DataFrame per slice from concatenated numpy arrays — a
-            # per-query pd.DataFrame + pd.concat here costs ~20-50 µs ×
-            # |queries| × 64 slices per job, a measurable slice of the
-            # batch's per-query marginal cost at 1M docs
-            live = [(qid, d, s) for qid, d, s in results if d.size]
-            if not live:
-                return pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
-                    {"query_id": "int64", "doc_id": "int64", "score": "float64"}
-                )
-            qids = np.concatenate(
-                [np.full(d.size, qid, dtype=np.int64) for qid, d, _ in live]
-            )
-            return pd.DataFrame(
-                {
-                    "query_id": qids,
-                    "doc_id": np.concatenate([d for _, d, _ in live]),
-                    "score": np.concatenate([s for _, _, s in live]),
-                }
-            )
+        def kernel(rows, allowed) -> pd.DataFrame:
+            return batch_frame(wand.topk_slice_batch(rows, plans, avgdl, allowed))
 
-        cand = self._candidate_rows(live_terms)
-        if filter_df is not None:
-            fids = self._aligned_filter(filter_df)
-
-            def ckernel(cand_pdf: pd.DataFrame, fid_pdf: pd.DataFrame) -> pd.DataFrame:
-                if cand_pdf.empty or fid_pdf.empty:
-                    return _rows([])
-                allowed = np.sort(fid_pdf["doc_id"].to_numpy(np.int64))
-                return _rows(topk_slice_batch(cand_pdf, plans, avgdl, allowed))
-
-            sliced = (
-                cand.groupBy("salt")
-                .cogroup(fids.groupBy("salt"))
-                .applyInPandas(ckernel, BATCH_DDL)
-            )
-        else:
-
-            def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-                return _rows(topk_slice_batch(pdf, plans, avgdl))
-
-            sliced = cand.groupBy("salt").applyInPandas(kernel, BATCH_DDL)
+        sliced = self._per_salt(self._candidate_rows(live_terms), kernel,
+                                BATCH_DDL, filter_df=filter_df)
         k_map = {qid: k for qid, _, k in plans}
         k_df = self.spark.createDataFrame(
             [(qid, k) for qid, k in k_map.items()], "query_id long, k int"
@@ -633,8 +667,7 @@ class IndexReader:
         rows = self._local_rows(terms)
         if not rows:
             return []
-        docs, scores = topk_rows(rows, idf_by_term, avgdl, fetch_k,
-                                 n_docs=int(self.stats["n_docs"]))
+        docs, scores = topk_rows(rows, idf_by_term, avgdl, fetch_k)
         return [
             (int(docs[i]), float(scores[i]))
             for i in range(offset, min(fetch_k, docs.size))
@@ -666,23 +699,11 @@ class IndexReader:
         terms = query_terms(query_text)
         if not terms:
             return self.spark.createDataFrame([], "doc_id long")
-        cand = self._candidate_rows(terms)
 
-        def decode_all(pdf: pd.DataFrame) -> pd.DataFrame:
-            from solrutils_spark.index.codec import decode_postings
+        def kernel(rows, _allowed) -> pd.DataFrame:
+            return pd.DataFrame({"doc_id": union_doc_ids(rows)})
 
-            out = []
-            for row in pdf.itertuples(index=False):
-                payload = np.frombuffer(row.payload, dtype=np.uint8)
-                d, _, _ = decode_postings(
-                    int(row.df_part), payload, np.asarray(row.block_offset),
-                    np.asarray(row.block_last),
-                )
-                out.append(d)
-            docs = np.unique(np.concatenate(out)) if out else np.empty(0, np.int64)
-            return pd.DataFrame({"doc_id": docs})
-
-        return cand.groupBy("salt").applyInPandas(decode_all, "doc_id long")
+        return self._per_salt(self._candidate_rows(terms), kernel, "doc_id long")
 
     def matching_count(self, query_text: str) -> int:
         """numFound for an UNFILTERED scored request (Solr's exact hit count,
@@ -701,21 +722,9 @@ class IndexReader:
             return 0
         if len(live) == 1:
             return int(dfs[live[0]])
-        cand = self._candidate_rows(live)
 
-        def count_slice(pdf: pd.DataFrame) -> pd.DataFrame:
-            from solrutils_spark.index.codec import decode_postings
+        def kernel(rows, _allowed) -> pd.DataFrame:
+            return pd.DataFrame({"n": [union_doc_ids(rows).size]})
 
-            out = []
-            for row in pdf.itertuples(index=False):
-                payload = np.frombuffer(row.payload, dtype=np.uint8)
-                d, _, _ = decode_postings(
-                    int(row.df_part), payload, np.asarray(row.block_offset),
-                    np.asarray(row.block_last),
-                )
-                out.append(d)
-            n = int(np.unique(np.concatenate(out)).size) if out else 0
-            return pd.DataFrame({"n": [n]})
-
-        rows = cand.groupBy("salt").applyInPandas(count_slice, "n long").collect()
-        return int(sum(r["n"] for r in rows))
+        counts = self._per_salt(self._candidate_rows(live), kernel, "n long")
+        return int(sum(r["n"] for r in counts.collect()))

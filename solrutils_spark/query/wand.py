@@ -1,12 +1,12 @@
-"""E5 — block-max TAAT top-k kernel (numpy, prune-only ⇒ rank-identical).
+"""E5 — block-max TAAT top-k kernels (numpy, prune-only ⇒ rank-identical).
 
 The reference's ranked retrieval is Lucene's BooleanQuery + BM25 TopDocs
 collector with block-max WAND skipping (Lucene 8 BMW / the public block-max
-WAND literature). This kernel is the vectorized term-at-a-time variant:
+WAND literature). :func:`topk_rows` is the vectorized term-at-a-time variant
+and the engine's one pruned disjunctive kernel:
 
-- terms are processed rare→hot (df ascending); accumulators are sorted
-  (doc_id, partial score) arrays merged with ``searchsorted``/``reduceat`` —
-  no Python per-posting loops;
+- terms are processed rare→hot (df ascending) into a dense accumulator
+  indexed by doc_id — no Python per-posting loops;
 - before decoding a block of term *t* we check the certificate::
 
       max(best accumulated score inside the block's doc range, 0)
@@ -20,19 +20,24 @@ WAND literature). This kernel is the vectorized term-at-a-time variant:
   ``test_wand_rank_identical`` / ``test_wand_equals_exhaustive`` comparing
   against exhaustive scoring on every reference query).
 
-The kernel runs per salt-slice (a doc_id range of the whole index) inside
-``applyInPandas``; slices are independent, so top-k is embarrassingly
-parallel and the driver only merges len(slices)·k candidate rows.
+Both kernels take one input format: a sequence of posting-row records
+(pandas ``itertuples`` rows or the engine's ``_PostingRow``).
+``search_local`` hands :func:`topk_rows` every salt's rows at once (one
+shared θ); the distributed path calls it once per salt slice inside
+``applyInPandas`` — slices are independent doc_id ranges, so top-k is
+embarrassingly parallel and only len(slices)·k candidate rows are merged.
+:func:`topk_slice_batch` scores many queries over one slice from a shared
+decode and is deliberately exhaustive.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from solrutils_spark.functions.analyzer import B, K1
-from solrutils_spark.index.codec import (BLOCK, decode_blocks,
-                                          decode_blocks_many, decode_run)
+from solrutils_spark.index.codec import BLOCK, decode_blocks_many, decode_run
+
+_EMPTY = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
 
 
 # test-visible instrumentation: how many times a kernel switched into
@@ -45,6 +50,19 @@ KERNEL_STATS = {"lookup_on": 0}
 def _tf_norm_bound(max_tf: np.ndarray, min_dl: np.ndarray, avgdl: float) -> np.ndarray:
     mt = max_tf.astype(np.float64)
     return mt / (mt + K1 * (1.0 - B + B * min_dl.astype(np.float64) / avgdl))
+
+
+def _bm25(idf: float, tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
+    tfv = tf.astype(np.float64)
+    return idf * tfv / (tfv + K1 * (1.0 - B + B * dl.astype(np.float64) / avgdl))
+
+
+def isin_sorted(ids: np.ndarray, d: np.ndarray) -> np.ndarray:
+    """Mask of the entries of ``d`` present in the sorted array ``ids``."""
+    if ids.size == 0:
+        return np.zeros(d.size, dtype=bool)
+    pos = np.minimum(np.searchsorted(ids, d), ids.size - 1)
+    return ids[pos] == d
 
 
 def _range_max(values: np.ndarray, left: np.ndarray, right: np.ndarray) -> np.ndarray:
@@ -97,27 +115,36 @@ def topk_rows(
     idf_by_term: dict[str, float],
     avgdl: float,
     k: int,
-    n_docs: int | None = None,
+    use_wand: bool = True,
+    allowed_docs: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Serving-path variant: process ALL (term, salt) rows with one shared θ.
+    """Disjunctive BM25 top-k over posting-row records → (doc_ids, scores),
+    tie-broken (score desc, doc_id asc).
 
-    A doc appears in exactly one salt per term (disjoint doc ranges), so the
-    skip certificate from :func:`topk_slice` holds row-by-row with a GLOBAL
-    accumulator: acc_max_in_block + block_ub + Σ ub(unprocessed terms) < θ.
-    Sharing θ across salts prunes strictly more than per-slice kernels, and
-    there is no per-slice python/pandas overhead. Rank-identical (prune-only).
+    ``term_rows``: posting-row records exposing the index columns as
+    attributes — one salt slice's rows (distributed path) or every salt's
+    rows of the query terms (``search_local``, where the records
+    come straight from the pyarrow table: round-2 profiling showed the
+    pandas conversion + traversal was ~45% of serving latency). A doc
+    appears in exactly one salt row per term (disjoint doc ranges), so the
+    skip certificate holds row-by-row with ONE accumulator and ONE θ shared
+    across all the rows given — prune-only, rank-identical.
 
-    ``term_rows``: a pandas DataFrame OR a plain list of row records exposing
-    the posting columns as attributes (the serving path passes records built
-    straight from the pyarrow table — round-2 profiling showed the pandas
-    conversion + ``.iloc``/``itertuples`` traversal was ~45% of serving
-    latency, more than the decode kernel itself).
+    ``use_wand=False`` keeps θ at −∞, so no block is ever skipped: the
+    exhaustive reference the equality tests compare against.
+
+    ``allowed_docs``: optional sorted int64 array — P2 filter semantics
+    (restricts candidates, never contributes to score;
+    BulkUpdateHandler.java:59 ``setIsFilter(true)``). Pruning STAYS enabled:
+    decoded postings are intersected with ``allowed_docs`` before they reach
+    the accumulator, so θ is the k-th best score over allowed docs only,
+    while block upper bounds remain valid for any doc — rank-identical to
+    exhaustive-over-the-filtered-domain (pinned by
+    test_index_engine.py::test_filtered_wand_prunes_exactly).
     """
-    if isinstance(term_rows, pd.DataFrame):
-        rows = list(term_rows.itertuples(index=False))
-    else:
-        rows = list(term_rows)
-    rows.sort(key=lambda r: (r.term, r.salt))
+    rows = sorted(term_rows, key=lambda r: (r.term, r.salt))
+    if not rows:
+        return _EMPTY
     # per-term max upper bound across its rows (sound: a doc sees one row/term)
     term_ub: dict[str, float] = {}
     df_by_term: dict[str, int] = {}
@@ -137,7 +164,13 @@ def topk_rows(
         remaining_after[t] = acc_ub
         acc_ub += term_ub[t]
 
-    if len(terms_sorted) == 1:
+    def restrict(d: np.ndarray, s: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        if allowed_docs is None:
+            return d, s
+        ok = isin_sorted(allowed_docs, d)
+        return d[ok], s[ok]
+
+    if len(terms_sorted) == 1 and use_wand:
         # single-term fast path: a doc's final score is exactly idf·tf_norm,
         # bounded above by its block bound — process blocks in DESCENDING
         # bound order and stop once the next bound can't beat the k-th score.
@@ -176,8 +209,7 @@ def topk_rows(
                 (payload, n, block_offset, np.arange(len(block_offset)), prev_lasts)
                 for payload, n, block_offset, prev_lasts in row_data
             ])
-            tfv = tf1.astype(np.float64)
-            scores1 = idf * tfv / (tfv + K1 * (1.0 - B + B * dl1.astype(np.float64) / avgdl))
+            docs1, scores1 = restrict(docs1, _bm25(idf, tf1, dl1, avgdl))
             sel = np.lexsort((docs1, -scores1))[: min(k, docs1.size)]
             return docs1[sel], scores1[sel]
         # chunked descending-bound scan with a running top-k buffer:
@@ -199,8 +231,7 @@ def topk_rows(
                  np.unique(np.asarray(bis)), row_data[ri][3])
                 for ri, bis in by_row.items()
             ])
-            tfv = tf.astype(np.float64)
-            cs = idf * tfv / (tfv + K1 * (1.0 - B + B * dl.astype(np.float64) / avgdl))
+            d, cs = restrict(d, _bm25(idf, tf, dl, avgdl))
             md = np.concatenate([top_d, d])
             ms = np.concatenate([top_s, cs])
             sel = np.lexsort((md, -ms))[: min(k, md.size)]
@@ -210,14 +241,15 @@ def topk_rows(
         return top_d, top_s
 
     # DENSE accumulator (round 4): doc ids are dense by construction, so a
-    # per-query float64 array indexed by doc_id replaces the per-term
-    # argsort-mergesort/add.reduceat merge (profiled ~35% of serving p50 at
-    # 1M docs). Per term: scores[d] += idf·tf_norm — fancy-index += is exact
-    # because a doc appears at most once per term; contributions still add
-    # in the SAME term order (df asc, term asc), so floating-point results
-    # are bit-identical to the sorted-merge accumulator it replaces. The
-    # block certificate becomes maximum.reduceat over the dense array's
-    # block ranges (zeros ≡ "no accumulated score", same semantics).
+    # per-query float64 array over [min first_doc, max block_last] of the
+    # rows replaces the per-term argsort-mergesort/add.reduceat merge
+    # (profiled ~35% of serving p50 at 1M docs). Per term: scores[d] +=
+    # idf·tf_norm — fancy-index += is exact because a doc appears at most
+    # once per term; contributions still add in the SAME term order (df asc,
+    # term asc), so floating-point results are bit-identical to the
+    # sorted-merge accumulator it replaces. The block certificate becomes
+    # maximum.reduceat over the dense array's block ranges (zeros ≡ "no
+    # accumulated score", same semantics).
     #
     # MaxScore essential-terms cutoff (round 5): once θ STRICTLY exceeds
     # ub(t) + Σ ub(remaining terms), a doc touched by NO processed term has
@@ -231,17 +263,13 @@ def topk_rows(
     # fuzz suites). This buys most of what impact-ordered postings would,
     # without re-encoding the doc-ordered delta layout or perturbing float
     # summation order.
-    if n_docs is None:  # derive the id space from the rows' last blocks
-        n_docs = 1 + max(
-            int(np.asarray(row.block_last)[-1])
-            for rows in rows_by_term.values() for row in rows
-        )
-    scores = np.zeros(int(n_docs), dtype=np.float64)
-    theta = -np.inf
-    # sorted unique touched doc ids: θ refresh is O(|touched|) over
-    # scores[touched] (the old scores[scores > 0] pass scanned the whole
-    # n_docs array once per term — ADVICE round-4), and lookup mode needs
-    # the id list anyway
+    base = min(int(row.first_doc) for row in rows)
+    hi = max(int(row.block_last[-1]) for row in rows)
+    scores = np.zeros(hi - base + 1, dtype=np.float64)
+    theta = -np.inf  # stays −∞ without use_wand: nothing is ever skipped
+    # sorted unique touched doc ids, base-shifted: θ refresh is
+    # O(|touched|) over scores[touched] (not a scan of the whole array once
+    # per term), and lookup mode needs the id list anyway
     touched = np.empty(0, dtype=np.int64)
     lookup = False
 
@@ -268,52 +296,48 @@ def topk_rows(
             prev_lasts[0] = int(row.first_doc) - 1
             prev_lasts[1:] = block_last[:-1]
 
-            if np.isfinite(theta):
+            if np.isfinite(theta):  # always true in lookup mode
+                lo, hi_b = prev_lasts + 1 - base, block_last + 1 - base
                 block_ub = idf * _tf_norm_bound(
                     np.asarray(row.block_max_tf), np.asarray(row.block_min_dl), avgdl
                 )
-                max_acc = _range_max(scores, prev_lasts + 1, block_last + 1)
-                keep = max_acc + block_ub + rem >= theta
+                keep = _range_max(scores, lo, hi_b) + block_ub + rem >= theta
+                if lookup:
+                    # only blocks holding ≥1 touched doc can contribute
+                    keep &= (np.searchsorted(touched, hi_b, side="left")
+                             > np.searchsorted(touched, lo, side="left"))
             else:
                 keep = np.ones(n_blocks, dtype=bool)
-            if lookup:
-                # only blocks holding ≥1 touched doc can contribute
-                lo = np.searchsorted(touched, prev_lasts + 1, side="left")
-                hi = np.searchsorted(touched, block_last, side="right")
-                keep &= hi > lo
 
             kept = np.flatnonzero(keep)
             if kept.size == 0:
                 continue
             parts.append((payload, n, block_offset, kept, prev_lasts))
-        if parts:
-            d, tf, dl = decode_blocks_many(parts)
-            tfv = tf.astype(np.float64)
-            nc = idf * tfv / (tfv + K1 * (1.0 - B + B * dl.astype(np.float64) / avgdl))
-            if lookup:
-                pos = np.searchsorted(touched, d)
-                pos = np.minimum(pos, touched.size - 1)
-                ok = touched[pos] == d
-                d, nc = d[ok], nc[ok]
-                if d.size == 0:
-                    continue
-                scores[d] += nc
-            else:
-                scores[d] += nc  # unique indices within a term: exact
-                # d is globally ascending (salt rows ascend, blocks ascend)
-                # and unique within the term — one merge keeps `touched`
-                # sorted-unique
-                touched = d if touched.size == 0 else np.union1d(touched, d)
-        if touched.size >= k:
+        if not parts:
+            continue
+        d, tf, dl = decode_blocks_many(parts)
+        d, nc = restrict(d, _bm25(idf, tf, dl, avgdl))
+        d = d - base
+        if lookup:
+            ok = isin_sorted(touched, d)
+            d, nc = d[ok], nc[ok]
+        if d.size == 0:
+            continue
+        scores[d] += nc  # unique indices within a term: exact
+        if not lookup:
+            # d is ascending (salt rows ascend, blocks ascend) and unique
+            # within the term — one merge keeps `touched` sorted-unique
+            touched = d if touched.size == 0 else np.union1d(touched, d)
+        if use_wand and touched.size >= k:
             tv = scores[touched]
             theta = np.partition(tv, tv.size - k)[tv.size - k]
 
     sel = _dense_topk(scores, k)
-    return sel, scores[sel]
+    return sel + base, scores[sel]
 
 
 def topk_slice_batch(
-    term_rows: pd.DataFrame,
+    term_rows,
     plans: list[tuple[int, dict[str, float], int]],
     avgdl: float,
     allowed_docs: np.ndarray | None = None,
@@ -321,34 +345,33 @@ def topk_slice_batch(
     """Many-queries-one-slice kernel: decode every candidate row ONCE, then
     score all queries from the decoded arrays. A Zipf-hot term shared by most
     of the batch decodes once instead of once per query — decode is the batch
-    path's dominant cost.
+    path's dominant cost. ``term_rows``: one salt slice's posting-row records
+    (the same input format as :func:`topk_rows`).
 
-    Accumulation is exhaustive with the SAME term order (df_part asc, term
-    asc) and the SAME stable-merge arithmetic as :func:`topk_slice`, and WAND
-    is prune-exact, so results are rank- and score-identical to calling
-    ``topk_slice`` per query (pinned by test_search_batch_rank_identical).
-    Returns [(query_id, doc_ids, scores)] for queries with ≥1 live term.
+    Accumulation is exhaustive with the SAME term order as :func:`topk_rows`
+    (df_part asc, term asc), and WAND is prune-exact, so results are rank-
+    identical to calling ``topk_rows`` per query (pinned by
+    test_search_batch_rank_identical). Scores agree to rounding only: this
+    kernel factors idf out of the shared tf-normalization. Returns
+    [(query_id, doc_ids, scores)] for queries with ≥1 live term.
 
     ``allowed_docs``: optional sorted int64 array — P2 filter semantics shared
     by the WHOLE batch (restricts candidates, never contributes to score).
     The intersection happens ONCE per decoded term, not per query — the
     filtered offline-eval shape. Rank-identical to per-query
-    ``topk_slice(..., allowed_docs=...)`` (pinned by
+    ``topk_rows(..., allowed_docs=...)`` (pinned by
     test_search_batch_filtered_rank_identical).
     """
     decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
     dfp: dict[str, int] = {}
-    for row in term_rows.itertuples(index=False):
+    for row in term_rows:
         payload = np.frombuffer(row.payload, dtype=np.uint8)
         block_offset = np.asarray(row.block_offset, dtype=np.int32)
         d, tf, dl = decode_run(
             payload, int(row.df_part), block_offset, 0, len(block_offset), 0
         )
         if allowed_docs is not None:
-            pos = np.searchsorted(allowed_docs, d)
-            ok = (pos < allowed_docs.size) & (
-                allowed_docs[np.minimum(pos, max(allowed_docs.size - 1, 0))] == d
-            ) if allowed_docs.size else np.zeros(d.size, dtype=bool)
+            ok = isin_sorted(allowed_docs, d)
             d, tf, dl = d[ok], tf[ok], dl[ok]
         tfv = tf.astype(np.float64)
         tfn = tfv / (tfv + K1 * (1.0 - B + B * dl.astype(np.float64) / avgdl))
@@ -385,7 +408,7 @@ def topk_slice_batch(
         # ``scores > 0`` θ refresh DOUBLED the measured marginal cost
         # (5.84 → 12.5 ms/query, BENCH/SERVING_PROBE_run3 vs the r5 rerun)
         # because there is no decode left to skip — MaxScore only pays when
-        # it gates decode (topk_rows / topk_slice, where it stays).
+        # it gates decode (topk_rows, where it stays).
         scores = np.zeros(span, dtype=np.float64)
         touched = 0
         for t in terms:
@@ -398,127 +421,3 @@ def topk_slice_batch(
         sel = _dense_topk(scores, k)
         out.append((qid, sel + base, scores[sel]))
     return out
-
-
-def topk_slice(
-    term_rows: pd.DataFrame,
-    idf_by_term: dict[str, float],
-    avgdl: float,
-    k: int,
-    use_wand: bool = True,
-    allowed_docs: np.ndarray | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Score one salt-slice. ``term_rows``: one row per (term) with encoded
-    postings (this slice's doc range). Returns (doc_ids, scores) of the
-    slice-local top-k, tie-broken (score desc, doc_id asc).
-
-    ``allowed_docs``: optional sorted int64 array — P2 filter semantics
-    (restricts candidates, never contributes to score;
-    BulkUpdateHandler.java:59 ``setIsFilter(true)``). WAND pruning STAYS
-    enabled: decoded postings are intersected with ``allowed_docs`` before
-    merging into the accumulator, so θ is the k-th best score over allowed
-    docs only, while block upper bounds remain valid upper bounds for any
-    doc (allowed included) — the skip certificate is unchanged and the
-    result is rank-identical to exhaustive-over-the-filtered-domain
-    (pinned by test_index_engine.py::test_filtered_wand_prunes_exactly).
-    """
-    order = np.lexsort(
-        (term_rows["term"].to_numpy(), term_rows["df_part"].to_numpy())
-    )  # df asc, term asc tie-break — deterministic processing order
-    rows = term_rows.iloc[order]
-
-    ubs = []
-    for row in rows.itertuples(index=False):
-        idf = idf_by_term[row.term]
-        bb = _tf_norm_bound(
-            np.asarray(row.block_max_tf), np.asarray(row.block_min_dl), avgdl
-        )
-        ubs.append(idf * bb.max() if len(bb) else 0.0)
-    ubs = np.asarray(ubs, dtype=np.float64)
-    remaining_after = np.concatenate([np.cumsum(ubs[::-1])[::-1][1:], [0.0]]) if len(ubs) else ubs
-
-    # DENSE accumulator over the slice's doc range (round 4, same rationale
-    # as topk_rows): base-shifted float64 array replaces the per-term
-    # argsort-mergesort merge; adds land in the same term order → floats
-    # identical to the sorted-merge accumulator
-    base = hi = None
-    for row in rows.itertuples(index=False):
-        bl = row.block_last
-        if len(bl):
-            fd = int(row.first_doc)
-            last = int(bl[-1] if isinstance(bl, np.ndarray) else bl[len(bl) - 1])
-            base = fd if base is None else min(base, fd)
-            hi = last if hi is None else max(hi, last)
-    if base is None:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-    scores = np.zeros(hi - base + 1, dtype=np.float64)
-    theta = -np.inf
-    touched = np.empty(0, dtype=np.int64)  # sorted unique LOCAL (base-shifted)
-    lookup = False
-
-    for t_idx, row in enumerate(rows.itertuples(index=False)):
-        idf = idf_by_term[row.term]
-        payload = np.frombuffer(row.payload, dtype=np.uint8)
-        block_offset = np.asarray(row.block_offset, dtype=np.int32)
-        block_last = np.asarray(row.block_last, dtype=np.int64)
-        n = int(row.df_part)
-        n_blocks = len(block_offset)
-        prev_lasts = np.empty(n_blocks, dtype=np.int64)
-        prev_lasts[0] = int(row.first_doc) - 1
-        prev_lasts[1:] = block_last[:-1]
-
-        if use_wand and not lookup and np.isfinite(theta) and theta > ubs[t_idx] + remaining_after[t_idx]:
-            # MaxScore essential-terms cutoff (see topk_rows): untouched docs
-            # are provably sub-θ from here on — decode only blocks holding a
-            # touched doc, add only to touched docs. θ only grows and the
-            # remaining-ub sum only shrinks, so lookup stays on.
-            lookup = True
-            KERNEL_STATS["lookup_on"] += 1
-
-        if use_wand and np.isfinite(theta):
-            block_ub = idf * _tf_norm_bound(
-                np.asarray(row.block_max_tf), np.asarray(row.block_min_dl), avgdl
-            )
-            # range-max of acc inside each block's (prev_last, last] doc range
-            max_acc = _range_max(
-                scores, np.maximum(prev_lasts + 1 - base, 0), block_last + 1 - base
-            )
-            keep = max_acc + block_ub + remaining_after[t_idx] >= theta
-        else:
-            keep = np.ones(n_blocks, dtype=bool)
-        if lookup:
-            lo = np.searchsorted(touched, prev_lasts + 1 - base, side="left")
-            hi_t = np.searchsorted(touched, block_last - base, side="right")
-            keep &= hi_t > lo
-
-        kept = np.flatnonzero(keep)
-        if kept.size == 0:
-            continue
-        nd, tf, dl = decode_blocks(payload, n, block_offset, kept, prev_lasts)
-        tfv = tf.astype(np.float64)
-        nc = idf * tfv / (tfv + K1 * (1.0 - B + B * dl.astype(np.float64) / avgdl))
-        if allowed_docs is not None:
-            pos = np.searchsorted(allowed_docs, nd)
-            ok = (pos < allowed_docs.size) & (allowed_docs[np.minimum(pos, allowed_docs.size - 1)] == nd)
-            nd, nc = nd[ok], nc[ok]
-            if nd.size == 0:
-                continue
-
-        ndl = nd - base
-        if lookup:
-            pos = np.searchsorted(touched, ndl)
-            pos = np.minimum(pos, touched.size - 1)
-            ok = touched[pos] == ndl
-            ndl, nc = ndl[ok], nc[ok]
-            if ndl.size == 0:
-                continue
-            scores[ndl] += nc
-        else:
-            scores[ndl] += nc  # unique indices within a term: exact
-            touched = ndl if touched.size == 0 else np.union1d(touched, ndl)
-        if touched.size >= k:
-            tv = scores[touched]
-            theta = np.partition(tv, tv.size - k)[tv.size - k]
-
-    sel = _dense_topk(scores, k)
-    return sel + base, scores[sel]

@@ -138,6 +138,153 @@ def test_filtered_wand_prunes_exactly(spark, reader):
         assert all(d % 2 == 0 for d, _ in w)
 
 
+SLICE_DOCS = 160 * 128  # 160 blocks per salt row: more than one scan chunk
+
+
+def _kernel_rows(term, salts, rng):
+    """Synthetic posting-row records of one term: one row per salt slice of
+    SLICE_DOCS docs; most blocks carry tf 1-2, three blocks carry high tfs
+    (a spiky list, so single-term queries take the descending-bound scan)."""
+    from types import SimpleNamespace
+
+    import numpy as np
+
+    from solrutils_spark.index.codec import encode_postings
+
+    rows = []
+    for salt in salts:
+        docs = np.arange(salt * SLICE_DOCS, (salt + 1) * SLICE_DOCS, dtype=np.int64)
+        tfs = rng.integers(1, 3, size=docs.size)
+        for b in rng.choice(docs.size // 128, size=3, replace=False):
+            tfs[b * 128:(b + 1) * 128] = rng.integers(1, 60, size=128)
+        dls = rng.integers(20, 400, size=docs.size)
+        enc = encode_postings(docs, tfs, dls)
+        rows.append(SimpleNamespace(
+            term=term, salt=salt, df_part=enc.n, first_doc=int(docs[0]),
+            payload=enc.payload.tobytes(), block_offset=enc.block_offset,
+            block_last=enc.block_last, block_max_tf=enc.block_max_tf,
+            block_min_dl=enc.block_min_dl))
+    return rows
+
+
+@pytest.mark.parametrize("terms", [["spiky"], ["spiky", "second"]])
+@pytest.mark.parametrize("k", [1, 10, 100])
+@pytest.mark.parametrize("allowed_kind", ["none", "every3", "empty"])
+def test_topk_rows_filter_and_prune_exact(monkeypatch, terms, k, allowed_kind):
+    """``topk_rows`` kernel contract, no Spark: pruned (use_wand=True) and
+    exhaustive (use_wand=False) runs return bit-identical ids and scores,
+    equal to a brute-force BM25 over the allowed docs only — on the
+    single-term descending-bound path and the multi-term dense path."""
+    import numpy as np
+
+    from solrutils_spark.functions.analyzer import B, K1
+    from solrutils_spark.index.codec import decode_postings
+    from solrutils_spark.query import wand
+
+    rng = np.random.default_rng(11)
+    rows = [r for t in terms for r in _kernel_rows(t, [0, 1], rng)]
+    idf = {"spiky": 2.5, "second": 0.7}
+    avgdl = 200.0
+    allowed = {"none": None,
+               "every3": np.arange(0, 2 * SLICE_DOCS, 3, dtype=np.int64),
+               "empty": np.empty(0, dtype=np.int64)}[allowed_kind]
+
+    # brute force: every posting decoded and scored, terms summed in the
+    # kernel's order (df asc, term asc), then the allowed docs kept
+    acc = np.zeros(2 * SLICE_DOCS)
+    for t in sorted(terms, key=lambda t: (sum(r.df_part for r in rows if r.term == t), t)):
+        for r in (r for r in rows if r.term == t):
+            d, tf, dl = decode_postings(r.df_part, np.frombuffer(r.payload, np.uint8),
+                                        r.block_offset, r.block_last)
+            tfv = tf.astype(np.float64)
+            acc[d] += idf[t] * tfv / (tfv + K1 * (1.0 - B + B * dl.astype(np.float64) / avgdl))
+    docs = np.flatnonzero(acc) if allowed is None else allowed
+    expected = sorted(zip(docs.tolist(), acc[docs].tolist()), key=lambda x: (-x[1], x[0]))[:k]
+
+    decoded = []
+    real = wand.decode_blocks_many
+    monkeypatch.setattr(wand, "decode_blocks_many",
+                        lambda parts: decoded.append(sum(len(p[3]) for p in parts)) or real(parts))
+    pruned = wand.topk_rows(rows, idf, avgdl, k, allowed_docs=allowed)
+    blocks_pruned = sum(decoded)
+    exhaustive = wand.topk_rows(rows, idf, avgdl, k, use_wand=False, allowed_docs=allowed)
+    assert blocks_pruned <= sum(decoded) - blocks_pruned
+    for d, s in (pruned, exhaustive):
+        assert list(zip(d.tolist(), s.tolist())) == expected
+    if terms == ["spiky"] and allowed_kind == "none":
+        assert blocks_pruned < sum(len(r.block_offset) for r in rows)
+
+
+def test_single_term_distributed_equals_local_and_oracle(spark, reader, oracle):
+    """Single-term queries take topk_rows' descending-bound path inside
+    every salt slice of the distributed search too: hot and rare terms,
+    unfiltered and under filter_df, must equal search_local (bit for bit)
+    and the oracle (restricted to the filter)."""
+    allowed = [d for d in range(N_DOCS) if d % 3 == 0]
+    fdf = spark.createDataFrame([(d,) for d in allowed], "doc_id long")
+    for qtext, k in [("hotTermZipfianStorm", 10), ("posting", 1),
+                     ("segment", 100), ("blockboundaryalpha", 10)]:
+        got = [(r["doc_id"], r["score"]) for r in reader.search(qtext, k).collect()]
+        assert got == reader.search_local(qtext, k), qtext
+        expected = oracle.search(qtext, k)
+        assert [d for d, _ in got] == [d for d, _ in expected], qtext
+        for (gd, gs), (_, es) in zip(got, expected):
+            assert gs == pytest.approx(es, abs=1e-9), f"{qtext} doc {gd}"
+
+        got_f = [(r["doc_id"], r["score"])
+                 for r in reader.search(qtext, k, filter_df=fdf).collect()]
+        local_f = [(d, s) for d, s in reader.search_local(qtext, N_DOCS)
+                   if d % 3 == 0][:k]
+        assert got_f == local_f, qtext
+        expected_f = [(d, s) for d, s in oracle.search(qtext, N_DOCS) if d % 3 == 0][:k]
+        assert [d for d, _ in got_f] == [d for d, _ in expected_f], qtext
+
+
+def test_per_salt_skips_slices_with_empty_filter_side(spark, reader, oracle):
+    """A salt slice whose filter side is empty yields no rows and never
+    reaches the kernel; filtered search then only returns docs of the
+    salts the filter covers, still equal to the oracle restricted to it."""
+    import pandas as pd
+
+    span = reader.salt_span()
+    allowed = list(range(span, min(2 * span, N_DOCS)))  # salt 1 only
+    fdf = spark.createDataFrame([(d,) for d in allowed], "doc_id long")
+    cand = reader._candidate_rows(["posting"])
+
+    def which_salt(rows, allowed_ids):
+        return pd.DataFrame({"doc_id": [int(rows[0].salt)]})
+
+    called = {r["doc_id"] for r in
+              reader._per_salt(cand, which_salt, "doc_id long", filter_df=fdf).collect()}
+    assert called == {1}
+    assert len({r["doc_id"] for r in
+                reader._per_salt(cand, which_salt, "doc_id long").collect()}) > 1
+
+    got = [(r["doc_id"], r["score"])
+           for r in reader.search("posting", N_DOCS, filter_df=fdf).collect()]
+    expected = [(d, s) for d, s in oracle.search("posting", N_DOCS) if d in set(allowed)]
+    assert got and [d for d, _ in got] == [d for d, _ in expected]
+
+
+def test_spark_closures_do_not_capture_engine_topk_rows(spark, reader, oracle, monkeypatch):
+    """The distributed closures must reach the kernel as ``wand.topk_rows``:
+    a patched ``engine.topk_rows`` (e.g. a tracing wrapper) must never be
+    pickled into tasks."""
+    from solrutils_spark.query import engine
+
+    def boom(*args, **kwargs):
+        raise AssertionError("engine.topk_rows reached a Spark task")
+
+    monkeypatch.setattr(engine, "topk_rows", boom)
+    allowed = [d for d in range(N_DOCS) if d % 2 == 0]
+    fdf = spark.createDataFrame([(d,) for d in allowed], "doc_id long")
+    for qtext, k in [("posting segment lucene", 10), ("hotTermZipfianStorm", 5)]:
+        got = [r["doc_id"] for r in reader.search(qtext, k).collect()]
+        assert got == [d for d, _ in oracle.search(qtext, k)], qtext
+        got_f = [r["doc_id"] for r in reader.search(qtext, k, filter_df=fdf).collect()]
+        assert got_f == [d for d, _ in oracle.search(qtext, N_DOCS) if d % 2 == 0][:k], qtext
+
+
 def test_salt_span_matches_index_layout(spark, reader):
     """salt = doc_id // salt_span must agree with the salt actually stored in
     the merged index for every posting row."""
@@ -455,7 +602,8 @@ def test_maxscore_lookup_mode_engages_and_stays_exact(spark, tmp_path):
     merged = []
     for _salt, slice_pdf in cand.groupby("salt"):
         for _qid, d, s in topk_slice_batch(
-            slice_pdf, plans, float(reader.stats["avgdl"])
+            list(slice_pdf.itertuples(index=False)), plans,
+            float(reader.stats["avgdl"])
         ):
             merged.extend(zip(d.tolist(), s.tolist()))
     assert wand.KERNEL_STATS["lookup_on"] == before, "batch kernel must stay exhaustive"
@@ -544,4 +692,33 @@ def test_aligned_filter_copartitions_and_is_rank_identical(spark, index_dir):
         for f in [fdf, fdf_ok, *frames]:
             f.unpersist()
     finally:
+        reader.index.unpersist()
+
+
+def test_cache_for_serving_new_partition_count_realigns_filters(spark, index_dir):
+    """Re-calling ``cache_for_serving`` with another partition count drops
+    the filter-alignment cache (unpersisting the frames the reader owns),
+    so a filtered search re-aligns its filter to the NEW count."""
+    reader = IndexReader(spark, index_dir).cache_for_serving(4)
+    first_index = reader.index
+    try:
+        fdf = reader.salted_filter(
+            spark.createDataFrame([(d,) for d in range(0, N_DOCS, 3)], "doc_id long")
+        ).repartition(7, "salt").persist()
+        fdf.count()
+        qtext = "posting segment lucene"
+        before = [(r["doc_id"], r["score"])
+                  for r in reader.search(qtext, 10, filter_df=fdf).collect()]
+        old = reader._filter_align_cache[id(fdf)]
+        assert old.owned and old.aligned.rdd.getNumPartitions() == 4
+
+        reader.cache_for_serving(6)
+        assert not old.aligned.is_cached
+        after = [(r["doc_id"], r["score"])
+                 for r in reader.search(qtext, 10, filter_df=fdf).collect()]
+        assert after == before
+        assert reader._filter_align_cache[id(fdf)].aligned.rdd.getNumPartitions() == 6
+        fdf.unpersist()
+    finally:
+        first_index.unpersist()
         reader.index.unpersist()

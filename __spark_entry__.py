@@ -13,9 +13,13 @@ driver's value-hash compares stably.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import reduce
+from operator import and_, or_
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from solrutils_spark.query.exact import ExactIndex, exact_index, has, has_phrase
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -38,99 +42,50 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# shared BM25 (simple analyzer twin of the engine path; the full code-aware
-# analyzer chain is pinned by tests/test_bm25_parity.py against the
-# pure-Python oracle — DuckDB can't express camelCase splitting sanely)
+# shared BM25: the declared BM25 queries are thin calls on the library's
+# exact-DataFrame path (query/exact.py) over the simple analyzer's tokens;
+# tests/test_bm25_parity.py pins the same path on the code-aware analyzer
+# against the pure-Python oracle (DuckDB can't express camelCase splitting)
 # --------------------------------------------------------------------------
+
+def _toks(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """documents → (doc_id, *cols, toks), simple analyzer: lowercase, split
+    on ``[^a-z0-9]+``, keep tokens of ≥ 2 chars (the oracle SQL's toks CTE)."""
+    return _t(spark, sf_dir, "documents").select(
+        "doc_id",
+        *cols,
+        F.filter(
+            F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
+            lambda t: F.length(t) >= 2,
+        ).alias("toks"),
+    )
+
+
+def _top(ix: ExactIndex, score: Column, where: Column) -> DataFrame:
+    """Top-``BM25_K`` ranked on the score rounded to 6 places, reported to 4
+    (the oracle SQL rounds alike, so hashes of the result values compare
+    stably)."""
+    return ix.topk(F.round(score, 6), where, BM25_K).select(
+        "doc_id", F.round(F.col("score"), 4).alias("score"), "rank"
+    )
+
 
 def _bm25_topk(
     spark: SparkSession, sf_dir: str, filter_mod: int | None = None,
     require_all: bool = False,
 ) -> DataFrame:
     """``filter_mod``: optional fq twin — restrict the RANKED domain to
-    doc_id % filter_mod == 0 AFTER scoring. P2 semantics (SURVEY §2,
+    doc_id % filter_mod == 0. P2 semantics (SURVEY §2,
     BulkUpdateHandler.java:59 setIsFilter): the filter never touches
     df/avgdl/idf — excluded docs still count toward corpus statistics,
     exactly like a Lucene filter clause. The engine-path twin
     (search/search_batch with filter_df) is rank-identity-pinned in pytest;
-    this exact-DataFrame twin makes the semantics oracle-checkable."""
-    docs = _t(spark, sf_dir, "documents")
-    # ONE tokenization per pass: the token array is materialized in its own
-    # projection (multiple downstream references keep CollapseProject from
-    # inlining the split — the same plan rule operators/dedup.py pins for
-    # shingles). Round 6 shape: stats (n, avgdl, per-term df) ride ONE agg
-    # over the token arrays, and per-term tf is a higher-order array count —
-    # the former explode-every-token → groupBy(doc_id, term) → join(dl)
-    # chain shuffled ~55 tokens/doc to score a 3-term query (2 exchanges +
-    # a re-tokenize for dl; 6.6 s → ~2 s at sf1.0).
-    toks = docs.select(
-        "doc_id",
-        F.filter(
-            F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-            lambda t: F.length(t) >= 2,
-        ).alias("toks"),
-    )
-    # Tokenize ONCE: the stats agg below and the scoring pass are two
-    # actions over the same token arrays — without a materialization each
-    # re-runs the split+filter over the full corpus (the tokenize is most
-    # of the query). Eager localCheckpoint holds the arrays MEMORY_AND_DISK
-    # for the query's lifetime; the ContextCleaner frees the blocks when the
-    # result goes out of scope (no CacheManager entry, nothing persists
-    # across runs — every invocation recomputes from the parquet input).
-    # Measured at 50k docs/local[32]: 3.10-3.18 s → 1.87-1.96 s, rows
-    # identical at sf0.1 and 50k.
-    toks = toks.localCheckpoint(eager=True)
-    stats = toks.agg(
-        F.count("*").alias("n"),
-        F.avg(F.size("toks")).alias("avgdl"),
-        *[
-            F.sum(F.array_contains("toks", t).cast("int")).alias(f"df{i}")
-            for i, t in enumerate(BM25_QUERY_TERMS)
-        ],
-    ).collect()[0]
-    n_docs, avgdl = int(stats["n"]), float(stats["avgdl"])
-    # df = docs containing the term (== the former tf-row count per term).
-    # idf stays a JVM log expression over literals (constant-folded by the
-    # same java.lang.Math.log the per-row expression used — bit-identical).
-    t_col = F.col("toks")
-    norm = F.lit(BM25_K1) * (
-        F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.size(t_col) / F.lit(avgdl)
-    )
-    def _tf(term):
-        # single-arg lambda (a 2-arg lambda would be read as (element, index))
-        return F.size(F.filter(t_col, lambda x: x == term))
-
-    tfs = [_tf(term) for term in BM25_QUERY_TERMS]
-    idfs = [
-        F.log(
-            F.lit(1.0)
-            + (F.lit(n_docs) - F.lit(int(stats[f"df{i}"])) + F.lit(0.5))
-            / (F.lit(int(stats[f"df{i}"])) + F.lit(0.5))
-        )
-        for i in range(len(BM25_QUERY_TERMS))
-    ]
-    # absent terms contribute exactly 0.0 (idf·0/(0+norm)); adding 0.0 leaves
-    # the double unchanged, so the fixed-order sum equals the former
-    # groupBy-sum of present-term contributions
-    contrib = tfs[0] * idfs[0] / (tfs[0] + norm)
-    for tf_c, idf_c in zip(tfs[1:], idfs[1:]):
-        contrib = contrib + tf_c * idf_c / (tf_c + norm)
-    domain = tfs[0] > 0
-    for tf_c in tfs[1:]:
-        domain = (domain & (tf_c > 0)) if require_all else (domain | (tf_c > 0))
-    scored = toks.filter(domain).select(
-        "doc_id", F.round(contrib, 6).alias("score")
-    )
-    from pyspark.sql import Window
-
-    if filter_mod is not None:  # fq AFTER scoring — stats untouched
-        scored = scored.filter(F.col("doc_id") % filter_mod == 0)
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= BM25_K)
-        .select("doc_id", F.round(F.col("score"), 4).alias("score"), "rank")
-    )
+    this exact-DataFrame path makes the semantics oracle-checkable."""
+    ix = exact_index(_toks(spark, sf_dir), BM25_QUERY_TERMS)
+    where = reduce(and_ if require_all else or_, map(has, BM25_QUERY_TERMS))
+    if filter_mod is not None:
+        where = where & (F.col("doc_id") % filter_mod == 0)
+    return _top(ix, ix.terms(BM25_QUERY_TERMS), where)
 
 
 def _bm25_oracle_sql(domain_where: str = "") -> str:
@@ -423,87 +378,17 @@ PHRASE_TERMS = ["customer", "join"]  # adjacent pair realized at sf0.01
 def q_phrase(spark, sf_dir):
     """Exact-phrase query twin (query/boolean.py::phrase_search), Lucene
     PhraseQuery scoring: tf = phrase frequency (adjacent-occurrence count),
-    idf = Σ idf(term) over the phrase's unique terms, BM25 tf-normalization.
-    The token array is materialized in its own projection before the
-    sliding-window lambda (the PLANS.md §17 quadratic-inline-Column trap:
-    each position probe must re-reference a column, not re-run the split)."""
-    w0, w1 = PHRASE_TERMS
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.filter(
-            F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-            lambda t: F.length(t) >= 2,
-        ).alias("toks"),
-    )
-    # tokenize once for the stats agg + scoring pass (same rationale and
-    # lifetime as _bm25_topk's checkpoint above)
-    toks = toks.localCheckpoint(eager=True)
-    stats = toks.agg(
-        F.count("*").alias("n"),
-        F.avg(F.size("toks")).alias("avgdl"),
-        F.sum(F.array_contains("toks", w0).cast("int")).alias("df0"),
-        F.sum(F.array_contains("toks", w1).cast("int")).alias("df1"),
-    ).collect()[0]
-    n, avgdl = int(stats["n"]), float(stats["avgdl"])
-    import math as _math
-
-    idf_sum = sum(
-        _math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-        for df in (int(stats["df0"]), int(stats["df1"]))
-    )
-    t = F.col("toks")
-    pf_expr = F.when(
-        F.size(t) >= 2,
-        F.size(
-            F.filter(
-                F.sequence(F.lit(1), F.size(t) - 1),
-                lambda i: (F.element_at(t, i) == w0)
-                & (F.element_at(t, i + 1) == w1),
-            )
-        ),
-    ).otherwise(F.lit(0))
-    scored = (
-        toks.withColumn("pf", pf_expr)
-        .filter(F.col("pf") > 0)
-        .select(
-            "doc_id",
-            F.round(
-                F.lit(idf_sum)
-                * F.col("pf")
-                / (
-                    F.col("pf")
-                    + F.lit(BM25_K1)
-                    * (
-                        F.lit(1.0 - BM25_B)
-                        + F.lit(BM25_B) * F.size(t) / F.lit(avgdl)
-                    )
-                ),
-                6,
-            ).alias("score"),
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= BM25_K)
-        .select("doc_id", F.round(F.col("score"), 4).alias("score"), "rank")
-    )
+    idf = Σ idf(term) over the phrase's unique terms, BM25 tf-normalization."""
+    ix = exact_index(_toks(spark, sf_dir), PHRASE_TERMS)
+    return _top(ix, ix.phrase(PHRASE_TERMS), has_phrase(PHRASE_TERMS))
 
 
 def q_prefix_query(spark, sf_dir):
     """Prefix/wildcard query twin (query/boolean.py::prefix_search):
     constant-score docs containing ≥1 term starting with 's' (Lucene's
     CONSTANT_SCORE multi-term rewrite — no BM25 ranking), index order."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-        lambda t: F.length(t) >= 2,
-    )
     return (
-        docs.select("doc_id", toks.alias("toks"))
+        _toks(spark, sf_dir)
         .filter(F.exists("toks", lambda t: t.startswith("s")))
         .select("doc_id", F.lit(1.0).alias("score"))
         .orderBy("doc_id")
@@ -516,13 +401,8 @@ def q_fuzzy_query(spark, sf_dir):
     docs containing ≥1 term within Levenshtein 2 of 'sort' (matches 'sort'
     and 'part' in the sf vocab) — both engines run the classic unweighted
     edit distance, so the doc sets agree exactly."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-        lambda t: F.length(t) >= 2,
-    )
     return (
-        docs.select("doc_id", toks.alias("toks"))
+        _toks(spark, sf_dir)
         .filter(F.exists("toks", lambda t: F.levenshtein(t, F.lit("sort")) <= 2))
         .select("doc_id", F.lit(1.0).alias("score"))
         .orderBy("doc_id")
@@ -537,108 +417,11 @@ def q_boolean_query(spark, sf_dir):
     MUST term (BM25 contribution), SHOULD phrase (PhraseQuery score, adds
     where it matches), MUST_NOT exclusion. Domain = contains 'customer' ∧
     ¬contains 'window'; score = customer contribution + phrase score."""
-    docs = _t(spark, sf_dir, "documents")
-    toks_df = docs.select(
-        "doc_id",
-        F.filter(
-            F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-            lambda t: F.length(t) >= 2,
-        ).alias("toks"),
-    )
-    # tokenize once for the stats agg + scoring pass (same rationale and
-    # lifetime as _bm25_topk's checkpoint)
-    toks_df = toks_df.localCheckpoint(eager=True)
-    stats = toks_df.agg(
-        F.count("*").alias("n"),
-        F.avg(F.size("toks")).alias("avgdl"),
-        F.sum(F.array_contains("toks", "customer").cast("int")).alias("dfc"),
-        F.sum(F.array_contains("toks", "table").cast("int")).alias("dft"),
-        F.sum(F.array_contains("toks", "hash").cast("int")).alias("dfh"),
-    ).collect()[0]
-    import math as _math
-
-    n, avgdl = int(stats["n"]), float(stats["avgdl"])
-
-    def _idf(df):
-        return _math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-
-    idf_c = _idf(int(stats["dfc"]))
-    idf_phrase = _idf(int(stats["dft"])) + _idf(int(stats["dfh"]))
-
-    t = F.col("toks")
-    norm = F.lit(BM25_K1) * (
-        F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.size(t) / F.lit(avgdl)
-    )
-    tf_c = F.size(F.filter(t, lambda x: x == "customer"))
-    contrib_c = F.lit(idf_c) * tf_c / (tf_c + norm)
-    pf = F.when(
-        F.size(t) >= 2,
-        F.size(
-            F.filter(
-                F.sequence(F.lit(1), F.size(t) - 1),
-                lambda i: (F.element_at(t, i) == "table")
-                & (F.element_at(t, i + 1) == "hash"),
-            )
-        ),
-    ).otherwise(F.lit(0))
-    phrase_score = F.when(pf > 0, F.lit(idf_phrase) * pf / (pf + norm)).otherwise(
-        F.lit(0.0)
-    )
-    scored = (
-        toks_df.filter(
-            F.array_contains("toks", "customer")
-            & ~F.array_contains("toks", "window")
-        )
-        .select("doc_id", F.round(contrib_c + phrase_score, 6).alias("score"))
-    )
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= BM25_K)
-        .select("doc_id", F.round(F.col("score"), 4).alias("score"), "rank")
-    )
-
-
-def _toks_stats(spark, sf_dir):
-    """(toks_df, n, avgdl) shared by the boolean-surface twins."""
-    docs = _t(spark, sf_dir, "documents")
-    toks_df = docs.select(
-        "doc_id", "lang",
-        F.filter(
-            F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-            lambda t: F.length(t) >= 2,
-        ).alias("toks"),
-    )
-    # tokenize once: every twin runs this stats agg, then _idf_of's per-term
-    # agg, then its own scoring pass over the same arrays (3 corpus
-    # tokenizations without a materialization; same rationale/lifetime as
-    # _bm25_topk's checkpoint)
-    toks_df = toks_df.localCheckpoint(eager=True)
-    stats = toks_df.agg(
-        F.count("*").alias("n"), F.avg(F.size("toks")).alias("avgdl")
-    ).collect()[0]
-    return toks_df, int(stats["n"]), float(stats["avgdl"])
-
-
-def _idf_of(spark, sf_dir, toks_df, n, term):
-    df = toks_df.agg(
-        F.sum(F.array_contains("toks", term).cast("int")).alias("df")
-    ).collect()[0]["df"]
-    import math as _math
-
-    return _math.log(1.0 + (n - int(df) + 0.5) / (int(df) + 0.5)), int(df)
-
-
-def _ranked(scored):
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= BM25_K)
-        .select("doc_id", F.round(F.col("score"), 4).alias("score"), "rank")
+    ix = exact_index(_toks(spark, sf_dir), ["customer", "table", "hash"])
+    return _top(
+        ix,
+        ix.terms(["customer"]) + ix.phrase(["table", "hash"]),
+        has("customer") & ~has("window"),
     )
 
 
@@ -649,28 +432,12 @@ def q_field_query(spark, sf_dir):
     the clause contributes the per-value constant idf(df_lang_en)/(1+k1);
     the text MUST term contributes normal BM25. Domain = lang='en' ∧
     contains 'customer'."""
-    toks_df, n, avgdl = _toks_stats(spark, sf_dir)
-    idf_c, _ = _idf_of(spark, sf_dir, toks_df, n, "customer")
-    import math as _math
-
-    df_en = toks_df.filter(F.col("lang") == "en").count()
-    field_score = _math.log(1.0 + (n - df_en + 0.5) / (df_en + 0.5)) / (
-        1.0 + BM25_K1
+    ix = exact_index(_toks(spark, sf_dir, "lang"), ["customer"], [("lang", "en")])
+    return _top(
+        ix,
+        ix.field("lang", "en") + ix.terms(["customer"]),
+        (F.col("lang") == "en") & has("customer"),
     )
-    t = F.col("toks")
-    norm = F.lit(BM25_K1) * (
-        F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.size(t) / F.lit(avgdl)
-    )
-    tf_c = F.size(F.filter(t, lambda x: x == "customer"))
-    scored = (
-        toks_df.filter((F.col("lang") == "en") & (tf_c > 0))
-        .select(
-            "doc_id",
-            F.round(F.lit(field_score) + F.lit(idf_c) * tf_c / (tf_c + norm),
-                    6).alias("score"),
-        )
-    )
-    return _ranked(scored)
 
 
 def q_range_query(spark, sf_dir):
@@ -678,23 +445,9 @@ def q_range_query(spark, sf_dir):
     doc_id:[100 TO 499]`` — the MUST text term scores BM25, the SHOULD range
     adds Lucene's constant-score 1.0 wherever it matches (ranges rewrite to
     constant score). Domain = contains 'customer' (the range is optional)."""
-    toks_df, n, avgdl = _toks_stats(spark, sf_dir)
-    idf_c, _ = _idf_of(spark, sf_dir, toks_df, n, "customer")
-    t = F.col("toks")
-    norm = F.lit(BM25_K1) * (
-        F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.size(t) / F.lit(avgdl)
-    )
-    tf_c = F.size(F.filter(t, lambda x: x == "customer"))
+    ix = exact_index(_toks(spark, sf_dir), ["customer"])
     in_range = F.col("doc_id").between(100, 499).cast("double")
-    scored = (
-        toks_df.filter(tf_c > 0)
-        .select(
-            "doc_id",
-            F.round(F.lit(idf_c) * tf_c / (tf_c + norm) + in_range,
-                    6).alias("score"),
-        )
-    )
-    return _ranked(scored)
+    return _top(ix, ix.terms(["customer"]) + in_range, has("customer"))
 
 
 def q_field_group(spark, sf_dir):
@@ -705,28 +458,13 @@ def q_field_group(spark, sf_dir):
     single-valued so exactly one contributes its per-value constant
     idf(df_v)/(1+k1); the text MUST term adds normal BM25. Domain =
     lang ∈ {en, de} ∧ contains 'customer'."""
-    toks_df, n, avgdl = _toks_stats(spark, sf_dir)
-    idf_c, _ = _idf_of(spark, sf_dir, toks_df, n, "customer")
-    import math as _math
-
-    fs = {}
-    for v in ("en", "de"):
-        df_v = toks_df.filter(F.col("lang") == v).count()
-        fs[v] = _math.log(1.0 + (n - df_v + 0.5) / (df_v + 0.5)) / (1.0 + BM25_K1)
-    t = F.col("toks")
-    norm = F.lit(BM25_K1) * (
-        F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.size(t) / F.lit(avgdl)
+    group = [("lang", "en"), ("lang", "de")]
+    ix = exact_index(_toks(spark, sf_dir, "lang"), ["customer"], group)
+    return _top(
+        ix,
+        ix.field(*group[0]) + ix.field(*group[1]) + ix.terms(["customer"]),
+        F.col("lang").isin("en", "de") & has("customer"),
     )
-    tf_c = F.size(F.filter(t, lambda x: x == "customer"))
-    group = F.when(F.col("lang") == "en", F.lit(fs["en"])).otherwise(F.lit(fs["de"]))
-    scored = (
-        toks_df.filter(F.col("lang").isin("en", "de") & (tf_c > 0))
-        .select(
-            "doc_id",
-            F.round(group + F.lit(idf_c) * tf_c / (tf_c + norm), 6).alias("score"),
-        )
-    )
-    return _ranked(scored)
 
 
 def q_grouped_boolean(spark, sf_dir):
@@ -734,26 +472,12 @@ def q_grouped_boolean(spark, sf_dir):
     supplier) AND -window`` — the group is a MUST sub-BooleanQuery whose
     score is the inner SHOULD sum and whose domain is ≥1 inner match; the
     MUST_NOT excludes. Domain = (customer ∨ supplier) ∧ ¬window."""
-    toks_df, n, avgdl = _toks_stats(spark, sf_dir)
-    idf_c, _ = _idf_of(spark, sf_dir, toks_df, n, "customer")
-    idf_s, _ = _idf_of(spark, sf_dir, toks_df, n, "supplier")
-    t = F.col("toks")
-    norm = F.lit(BM25_K1) * (
-        F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.size(t) / F.lit(avgdl)
+    ix = exact_index(_toks(spark, sf_dir), ["customer", "supplier"])
+    return _top(
+        ix,
+        ix.terms(["customer", "supplier"]),
+        (has("customer") | has("supplier")) & ~has("window"),
     )
-    tf_c = F.size(F.filter(t, lambda x: x == "customer"))
-    tf_s = F.size(F.filter(t, lambda x: x == "supplier"))
-    contrib = (
-        F.when(tf_c > 0, F.lit(idf_c) * tf_c / (tf_c + norm)).otherwise(F.lit(0.0))
-        + F.when(tf_s > 0, F.lit(idf_s) * tf_s / (tf_s + norm)).otherwise(F.lit(0.0))
-    )
-    scored = (
-        toks_df.filter(
-            ((tf_c > 0) | (tf_s > 0)) & ~F.array_contains("toks", "window")
-        )
-        .select("doc_id", F.round(contrib, 6).alias("score"))
-    )
-    return _ranked(scored)
 
 
 # --------------------------------------------------------------------------

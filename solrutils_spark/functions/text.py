@@ -7,16 +7,11 @@ Behavioral port of the reference's string utilities:
 - :func:`normalize` — CRLF→LF + strip spaces around newlines (Util.java:452-457)
 - :func:`create_valid_name` / :func:`to_tag_id` — tag-path normalization
   (Util.java:494-519; goldens from UtilTest.java:12-20)
-
-Each has a Column-expression twin for data-side use (Catalyst-optimizable).
 """
 
 from __future__ import annotations
 
 import re
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # Solr ClientUtils.escapeQueryChars set: \ + - ! ( ) : ^ [ ] " { } ~ * ? | & ; / and whitespace
 _ESCAPE_RE = re.compile(r'([\\+\-!():^\[\]"{}~*?|&;/]|\s)')
@@ -43,24 +38,3 @@ def create_valid_name(title: str) -> str:
 
 def to_tag_id(category: str, sep: str = ": ", join: str = "/") -> str:
     return join.join(create_valid_name(p) for p in re.split(sep, category))
-
-
-# ---- Column-expression twins (data side) -----------------------------------
-
-def normalize_col(col: Column) -> Column:
-    c = F.trim(col)
-    c = F.regexp_replace(c, r"\r\n?", "\n")
-    c = F.regexp_replace(c, r"\n +", "\n")
-    return F.regexp_replace(c, r" +\n", "\n")
-
-
-def create_valid_name_col(col: Column) -> Column:
-    return F.regexp_replace(F.lower(col), ILLEGAL_CHARS_RE.pattern, "-")
-
-
-def to_tag_id_col(col: Column, sep: str = ": ", join: str = "/") -> Column:
-    parts = F.split(col, sep)
-    cleaned = F.transform(
-        parts, lambda p: F.regexp_replace(F.lower(p), ILLEGAL_CHARS_RE.pattern, "-")
-    )
-    return F.array_join(cleaned, join)

@@ -3,7 +3,7 @@
 Reference semantics covered:
 - unique-key identity / upsert (E9): the reference resolves documents by the
   schema uniqueKey (BulkUpdateHandler.java:34,91). Our key is (repo, path);
-  latest ``commit`` wins — a window row_number, never a driver loop.
+  latest ``commit`` wins — a keys-only groupBy max, never a driver loop.
 - stored-field retention (S3 "store raw XML" analog, XsltUpdateHandler.java:
   156-189): ``content`` is kept as a column and its sha256 recorded, giving
   the per-row invariant vs the source table required by BASELINE.json.
@@ -42,18 +42,6 @@ from pyspark.sql import functions as F
 # single bucket's skinny keys outgrow one task's sort) pass ``num_partitions``
 # explicitly — it is a determinism-affecting build config, like segment_size.
 _ID_BUCKETS = 1024
-
-
-def dedup_latest_commit(corpus: DataFrame) -> DataFrame:
-    """E9 unique-key upsert: keep the lexicographically-max commit per (repo, path)."""
-    w = Window.partitionBy("repo", "path").orderBy(
-        F.col("commit").desc(), F.col("content").desc()
-    )
-    return (
-        corpus.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 def assign_doc_ids(

@@ -1,21 +1,15 @@
-"""A10 — global BM25 statistics: N, avgdl, per-term df.
+"""A10 — global BM25 statistics: N, avgdl and the idf of a term's df.
 
 Lucene maintains these inside each segment + merged reader; the reference
-depends on them implicitly through BM25 (pom.xml:36-40). Here they are two
-DataFrame aggregates; the per-term df table is small relative to the corpus
-(vocabulary, not postings) and the handful of rows a query needs is looked up
-driver-side / broadcast to scoring UDFs.
+depends on them implicitly through BM25 (pom.xml:36-40). The exact path
+collects N, avgdl and the query's dfs in one aggregate
+(:func:`solrutils_spark.query.exact.exact_index`).
 """
 
 from __future__ import annotations
 
 import math
 from dataclasses import dataclass
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from solrutils_spark.functions.analyzer import B, K1
 
 
 @dataclass(frozen=True)
@@ -25,26 +19,3 @@ class CorpusStats:
 
     def idf(self, df: int) -> float:
         return math.log(1.0 + (self.n_docs - df + 0.5) / (df + 0.5))
-
-
-def compute_corpus_stats(docs_with_len: DataFrame) -> CorpusStats:
-    row = docs_with_len.agg(
-        F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")
-    ).collect()[0]
-    return CorpusStats(n_docs=int(row["n"]), avgdl=float(row["avgdl"] or 0.0))
-
-
-def compute_df(postings: DataFrame) -> DataFrame:
-    """term → document frequency. Partial (map-side) agg then final — Catalyst native."""
-    return postings.groupBy("term").agg(F.count("*").alias("df"))
-
-
-def term_stats_for(df_table: DataFrame, terms: list[str]) -> dict[str, int]:
-    """df for the query's terms only — a pruned lookup, never a full collect."""
-    if not terms:
-        return {}
-    rows = df_table.filter(F.col("term").isin(terms)).collect()
-    return {r["term"]: int(r["df"]) for r in rows}
-
-
-__all__ = ["CorpusStats", "compute_corpus_stats", "compute_df", "term_stats_for", "K1", "B"]

@@ -1,4 +1,4 @@
-"""S4/S5 — bulk re-index of documents matching a filter (BulkUpdateHandler twin).
+"""S4 — bulk re-index of documents matching a filter (BulkUpdateHandler twin).
 
 Reference lifecycle (BulkUpdateHandler.java:32-165): parse q+fq* into
 non-scoring filters, iterate the matching DocSet, per doc check the
@@ -18,8 +18,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from solrutils_spark.index.builder import build_index
 
 
 def bulk_update(
@@ -62,10 +60,3 @@ def bulk_update(
     untouched = docs.join(updated.select(id_column), id_column, "left_anti")
     result["updated"] = untouched.unionByName(updated)
     return result
-
-
-def reindex(
-    corpus: DataFrame, out_dir: str, **build_kwargs
-) -> dict:
-    """S5 commit analog — full lineage-tracked rebuild (resume-aware)."""
-    return build_index(corpus, out_dir, **build_kwargs)

@@ -20,7 +20,6 @@ from html import unescape
 from html.parser import HTMLParser
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 
@@ -65,9 +64,3 @@ def html_to_text_col(col: Column) -> Column:
 
     return _udf(col)
 
-
-def strip_tags_fast(col: Column) -> Column:
-    """JVM-side fast path: regex tag strip (no entity decode, no script skip).
-    Use for bulk indexing where the corpus is known tag-simple; fall back to
-    :func:`html_to_text_col` for full fidelity."""
-    return F.regexp_replace(col, r"<[^>]*>", "")

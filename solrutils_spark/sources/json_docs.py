@@ -21,23 +21,11 @@ def docs_json_lines(df: DataFrame, fields: list[str] | None = None) -> DataFrame
     return df.select(F.to_json(F.struct(*df.columns)).alias("value"))
 
 
-def write_json_docs(df: DataFrame, path: str, fields: list[str] | None = None) -> None:
-    """Distributed JSON-lines sink (the scalable wire format)."""
-    if fields:
-        df = df.select(*fields)
-    df.write.mode("overwrite").json(path)
-
-
 def docs_json_array(df: DataFrame, fields: list[str] | None = None, limit: int = 1000) -> str:
     """The reference's exact wire shape — a bare JSON array (driver-side,
     bounded by ``limit``; used for response assembly, never for bulk export)."""
     rows = docs_json_lines(df.limit(limit), fields).collect()
     return "[" + ",".join(r["value"] for r in rows) + "]"
-
-
-def parse_json_docs(spark, path: str) -> DataFrame:
-    """S1 data-side analog: read JSON docs with schema inference."""
-    return spark.read.json(path)
 
 
 def to_response_docs(df: DataFrame, limit: int = 1000) -> list[dict]:

@@ -5,7 +5,7 @@ Reference lifecycle: receive XML docs, apply a compiled XSLT Templates object
 (:200-246), optionally retain the raw XML in a field (:156-195), feed the
 update-processor chain.
 
-Spark shape: XML files → DataFrame via a charset-aware reader; the transform
+Spark shape: XML bytes are decoded with charset sniffing; the transform
 is a user-supplied function applied in ``mapInPandas`` (XSLT itself needs
 ``lxml``, which is not in this container — the transform hook is gated behind
 an import-try and raises a clear error if real XSLT is requested without lxml).
@@ -19,7 +19,7 @@ import re
 from collections.abc import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 _PROLOG_RE = re.compile(rb'<\?xml[^>]*encoding=["\']([A-Za-z0-9._-]+)["\']')
 
@@ -50,24 +50,6 @@ def decode_xml_bytes(data: bytes) -> str:
             data = data[len(bom):]
             break
     return data.decode(enc, errors="replace")
-
-
-def read_xml_files(
-    spark: SparkSession, path_glob: str, keep_raw: bool = True
-) -> DataFrame:
-    """Whole-file XML read with charset sniffing → (path, xml) rows."""
-    rdd_like = spark.read.format("binaryFile").load(path_glob)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "path": pdf["path"],
-                    "xml": pdf["content"].map(lambda b: decode_xml_bytes(bytes(b))),
-                }
-            )
-
-    return rdd_like.select("path", "content").mapInPandas(gen, "path string, xml string")
 
 
 def make_xslt_transform(

@@ -1,9 +1,14 @@
 """Local twin of the driver's correctness gate: each queries() entry vs its
-DuckDB oracle at sf0.01 — row count, column names, order-insensitive values."""
+DuckDB oracle at sf0.01 — row count, column names, order-insensitive values.
+
+``SPARK_GRAFT_SF_DIR`` (also read by bench.py) points the sweep at another
+scale factor, e.g. ``SPARK_GRAFT_SF_DIR=<testdata>/sf0.1 python -m pytest
+tests/test_entry_oracle.py``."""
 
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 import pytest
@@ -11,6 +16,8 @@ import pytest
 import __spark_entry__ as entrymod
 
 SF_DIR = "/root/testdata/sf0.01"
+TESTDATA = os.path.dirname(SF_DIR)
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", SF_DIR)
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
@@ -81,3 +88,15 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert {"doc_id", "score", "rank"} <= set(df.columns)
+
+
+@pytest.mark.parametrize("name", ["bm25_topk", "field_query"])
+def test_bm25_plan_shape(spark, name):
+    """Round-6 shape (plans/r06/bm25_topk_after.txt): scoring reads the
+    tokenize-once checkpoint with array functions (no explode) and ranks
+    with a heap (TakeOrderedAndProject), never a full sort."""
+    sdf = entrymod.queries()[name](spark, os.path.join(TESTDATA, "sf0.001"))
+    plan = sdf._sc._jvm.PythonSQLUtils.explainString(sdf._jdf.queryExecution(), "formatted")
+    assert "Scan ExistingRDD" in plan and "localCheckpoint" in plan, plan
+    assert "Generate" not in plan, plan
+    assert "TakeOrderedAndProject" in plan, plan

@@ -20,9 +20,14 @@ Param interpretation:
 - ``facet.field`` / ``facet.query`` / ``facet.range`` + ``json.facet``  (A2-A5)
   computed over the FILTERED, UNPAGED domain (Solr semantics)
 
-Execution shape at scale: one scored pass (WAND top-k) + one agg pass per
-facet family over the same filtered domain (cached when both are needed);
-the response carries only top-k rows and facet buckets to the driver.
+Execution shape at scale: one match-set evaluation per request, then one
+agg pass per facet family over the same filtered domain. A plain-term ``q``
+runs the WAND top-k pass and, for numFound and facets, one unscored match
+pass. A Lucene-syntax ``q`` runs each boolean clause's per-salt kernel once:
+the filtered match set is persisted and top-k, numFound and the facet
+domain all read it (the reference holds one searcher snapshot per request,
+SearchOp.java:133-148). The facet domain is persisted for the request too.
+The response carries only top-k rows and facet buckets to the driver.
 """
 
 from __future__ import annotations
@@ -90,7 +95,6 @@ class PlanExecutor:
     def execute(self, plan: QueryPlan) -> dict:
         domain = self._filtered_domain(plan)
         q = plan.get_param("q")
-        rows = int(float(plan.get_param("rows", "10")))
         start = int(float(plan.get_param("start", "0")))
         scored = self.reader is not None and q not in (None, "", "*:*")
 
@@ -101,6 +105,52 @@ class PlanExecutor:
             or plan.get_param("json.facet")
         )
 
+        # frames persisted for the life of this request, released at the end
+        held: list[DataFrame] = []
+        try:
+            hits, facet_domain = self._hits(plan, domain, scored, need_facets,
+                                            held)
+            # ONE domain computation per request: numFound + every facet
+            # family all act on facet_domain, and for scored requests each
+            # action would otherwise re-run the full query-term postings
+            # decode (the reference's SearchOp.java:133-148 holds one
+            # searcher snapshot per request).
+            if facet_domain is not None:
+                facet_domain = facet_domain.persist()
+                held.append(facet_domain)
+            docs = [r.asDict(recursive=True) for r in hits.collect()]
+            if facet_domain is not None:
+                num_found = facet_domain.count()
+            elif scored and not plan.get_params("fq"):
+                # exact hit count without materializing doc_ids: single-term =
+                # sidecar df lookup (no job); multi-term = per-slice unique counts
+                num_found = self.reader.matching_count(q)
+            elif scored:
+                num_found = self._scored_domain(domain, q).count()
+            else:
+                num_found = domain.count()
+            response: dict = {
+                "responseHeader": {"params": {k: v for k, v in plan.params.items()}},
+                "response": {"numFound": num_found, "start": start, "docs": docs},
+            }
+            if need_facets:
+                self._add_facets(plan, facet_domain, response)
+            for handler in plan.response_handlers:
+                handler.process(plan, response)
+            return response
+        finally:
+            for df in held:
+                df.unpersist()
+
+    # -- internals -----------------------------------------------------------
+    def _hits(self, plan: QueryPlan, domain: DataFrame, scored: bool,
+              need_facets: bool, held: list[DataFrame]
+              ) -> tuple[DataFrame, DataFrame | None]:
+        """(top-k hits, facet domain or None) of one request; frames it
+        persists go on ``held`` for the caller to release."""
+        q = plan.get_param("q")
+        rows = int(float(plan.get_param("rows", "10")))
+        start = int(float(plan.get_param("start", "0")))
         if scored:
             # fq filters ride along as a DataFrame — the reader cogroups the
             # filtered domain's ids with the postings by salt slice, so the
@@ -131,13 +181,18 @@ class PlanExecutor:
                         ),
                         self.id_column, "leftsemi",
                     )
+                # ONE evaluation of the clause kernels per request: top-k,
+                # numFound and the facet domain below all read this match
+                # set (the first action fills the cache, later ones reuse it)
+                bscored = bscored.persist()
+                held.append(bscored)
                 ranked = bscored.orderBy(
                     F.desc("score"), F.asc(self.id_column)
                 ).limit(rows + start)
                 topk = ranked.offset(start) if start else ranked
                 hits = self.reader.fetch(topk, self._fl(plan))
                 # the boolean match domain doubles as numFound AND the facet
-                # domain (persisted once below, reused by every action)
+                # domain
                 facet_domain = domain.join(
                     bscored.select(self.id_column), self.id_column, "left_semi"
                 )
@@ -160,40 +215,8 @@ class PlanExecutor:
             if fl:
                 hits = hits.select(*fl)
             facet_domain = domain if need_facets else None
+        return hits, facet_domain
 
-        # ONE domain computation per request: numFound + every facet family
-        # all act on facet_domain, and for scored requests each action would
-        # otherwise re-run the full query-term postings decode (the
-        # reference's SearchOp.java:133-148 holds one searcher snapshot per
-        # request). Persist for the life of the request, release at the end.
-        persisted = facet_domain.persist() if facet_domain is not None else None
-        facet_domain = persisted if persisted is not None else facet_domain
-        try:
-            docs = [r.asDict(recursive=True) for r in hits.collect()]
-            if facet_domain is not None:
-                num_found = facet_domain.count()
-            elif scored and not plan.get_params("fq"):
-                # exact hit count without materializing doc_ids: single-term =
-                # sidecar df lookup (no job); multi-term = per-slice unique counts
-                num_found = self.reader.matching_count(q)
-            elif scored:
-                num_found = self._scored_domain(domain, q).count()
-            else:
-                num_found = domain.count()
-            response: dict = {
-                "responseHeader": {"params": {k: v for k, v in plan.params.items()}},
-                "response": {"numFound": num_found, "start": start, "docs": docs},
-            }
-            if need_facets:
-                self._add_facets(plan, facet_domain, response)
-            for handler in plan.response_handlers:
-                handler.process(plan, response)
-            return response
-        finally:
-            if persisted is not None:
-                persisted.unpersist()
-
-    # -- internals -----------------------------------------------------------
     def _fl(self, plan: QueryPlan) -> list[str] | None:
         fl = plan.get_param("fl")
         return [f.strip() for f in fl.split(",")] if fl else None

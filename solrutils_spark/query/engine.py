@@ -35,6 +35,7 @@ and block upper bounds remain valid for any doc — rank-identical (pinned).
 from __future__ import annotations
 
 import math
+import re
 from collections import OrderedDict
 from pathlib import Path
 from typing import NamedTuple
@@ -108,6 +109,47 @@ class _AlignedFilter(NamedTuple):
     owned: bool         # persisted by the reader: eviction unpersists it
 
 
+class KernelError(RuntimeError):
+    """A per-salt kernel failed; the message names the slice it ran on."""
+
+
+def _naming_slice(fn):
+    """Wrap a per-salt kernel ``fn(rows, allowed)`` so that an exception
+    re-raises as :class:`KernelError` naming the salt, the kernel's
+    ``__qualname__`` and the slice's sorted distinct terms — a Python
+    stage's traceback alone says neither which slice nor which query."""
+
+    def run(rows, allowed):
+        try:
+            return fn(rows, allowed)
+        except Exception as e:
+            salt = rows[0].salt if rows else None
+            terms = sorted({r.term for r in rows})
+            raise KernelError(
+                f"{fn.__qualname__} failed on salt={salt} terms={terms}: {e!r}"
+            ) from e
+
+    return run
+
+
+_SALT_HASH = re.compile(r"hashpartitioning\(salt#\d+, (\d+)\)")
+
+
+def _salt_hash_partitions(df: DataFrame) -> int | None:
+    """Partition count of ``df`` when its executed plan is hash-partitioned
+    on ``salt`` alone — the layout the per-salt cogroup needs to skip the
+    filter-side exchange — else None (round-robin, range, unknown).
+
+    ``df.rdd`` runs the frame's adaptive stages first: until then AQE's
+    root reports UnknownPartitioning."""
+    df.rdd.getNumPartitions()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    m = _SALT_HASH.fullmatch(plan.outputPartitioning().toString())
+    return int(m.group(1)) if m else None
+
+
 _SLICED_FALLBACKS = 0  # observability: serving reads should NEVER be sliced
 
 
@@ -168,10 +210,16 @@ class IndexReader:
         self.index_dir = index_dir
         self.stats = read_stats(index_dir)
         self.index = read_index(spark, index_dir)
+        # memoized reads of the on-disk index (immutable after build): each
+        # fresh read would re-list its files and re-read parquet footers,
+        # one Spark job per request
         self._docs: DataFrame | None = None
+        self._lean_docs: DataFrame | None = None
+        self._positional_index: DataFrame | None = None
         self._df_cache: dict[str, int] = {}
+        # (field, value) → df of a keyword-field clause (qparser)
+        self._field_df_cache: dict[tuple[str, str], int] = {}
         self._bucket_datasets: dict[int, object] = {}
-        self._has_positions: bool | None = None
         self._serving_partitions: int | None = None
         # filter-alignment cache: id(filter_df) → _AlignedFilter.
         # Bounded LRU; see _aligned_filter.
@@ -183,6 +231,24 @@ class IndexReader:
         if self._docs is None:
             self._docs = read_docs(self.spark, self.index_dir)
         return self._docs
+
+    @property
+    def lean_docs(self) -> DataFrame:
+        """The docs table without the doc_len sidecar join (stored-field
+        fetches)."""
+        if self._lean_docs is None:
+            self._lean_docs = read_docs(self.spark, self.index_dir, with_len=False)
+        return self._lean_docs
+
+    @property
+    def positional_index(self) -> DataFrame:
+        """The on-disk index INCLUDING the positional sidecar columns — not
+        the lean serving cache: only phrase queries pay for position bytes."""
+        if self._positional_index is None:
+            self._positional_index = read_index(
+                self.spark, self.index_dir, with_positions=True
+            )
+        return self._positional_index
 
     def cache_for_serving(self, num_partitions: int | None = None,
                           sort_for_pruning: bool = False) -> "IndexReader":
@@ -271,25 +337,14 @@ class IndexReader:
 
     def has_positions(self) -> bool:
         """True when the on-disk index carries the positional sidecar
-        (round-6 codec third stream) — schema check only, cached."""
-        if self._has_positions is None:
-            from solrutils_spark.index.merge import read_index
-
-            cols = read_index(
-                self.spark, self.index_dir, with_positions=True
-            ).columns
-            self._has_positions = "pos_payload" in cols
-        return self._has_positions
+        (round-6 codec third stream) — schema check only."""
+        return "pos_payload" in self.positional_index.columns
 
     def _candidate_rows_with_positions(self, terms: list[str]) -> DataFrame:
-        """Candidate rows INCLUDING the positional sidecar columns — read
-        fresh from disk (not the lean serving cache): only phrase queries
-        pay for the position bytes, and only for their own terms' buckets."""
-        from solrutils_spark.index.merge import read_index
-
-        idx = read_index(self.spark, self.index_dir, with_positions=True)
+        """Candidate rows INCLUDING the positional sidecar columns, for
+        their own terms' buckets only."""
         buckets = sorted({term_bucket(t, self.stats["num_buckets"]) for t in terms})
-        return idx.filter(
+        return self.positional_index.filter(
             F.col("bucket").isin(buckets) & F.col("term").isin(terms)
         )
 
@@ -373,16 +428,18 @@ class IndexReader:
         (10.7/8.7/5.6 s vs 7.7/6.9/4.2 s), and a co-partitioned filter is at
         parity with the unfiltered loop.
 
-        When serving mode is on and the counts mismatch, the salted ids are
-        re-partitioned ONCE and persisted (persist — not localCheckpoint —
-        because only InMemoryRelation preserves the hash partitioning for
-        Catalyst; a checkpointed RDD reports UnknownPartitioning and the
-        per-query exchange comes back). Entries live in a bounded LRU keyed
+        When serving mode is on and the salted ids are not hash-partitioned
+        on ``salt`` at the serving count (a different count, or the right
+        count by round-robin ``repartition(n)``, which Catalyst still has to
+        re-exchange), they are re-partitioned ONCE and persisted (persist —
+        not localCheckpoint — because only InMemoryRelation preserves the
+        hash partitioning for Catalyst; a checkpointed RDD reports
+        UnknownPartitioning and the per-query exchange comes back). Entries live in a bounded LRU keyed
         by the caller's filter frame (the Solr filterCache analog,
         filterCache semantics like PlanExecutor._cached_filter_ids):
         at most ``_filter_align_max`` aligned domains are resident, eviction
         unpersists. On a correctly co-partitioned cluster deployment the
-        counts match and this cache never engages (zero extra memory)."""
+        layouts match and this cache never persists a copy."""
         n = self._serving_partitions
         if n is None:
             return self.salted_filter(filter_df)
@@ -393,13 +450,15 @@ class IndexReader:
             return hit.aligned
         fids = self.salted_filter(filter_df)
         try:
-            cur = fids.rdd.getNumPartitions()
+            cur = _salt_hash_partitions(fids)
         except Exception:
             return fids
         if cur == n:
-            # memoize the pass-through too: the partition-count probe above
+            # memoize the pass-through too: the partitioning probe above
             # is a per-frame plan conversion (~tens of ms of py4j) that a
-            # correctly co-partitioned caller should pay once, not per query
+            # correctly co-partitioned caller should pay once, not per query.
+            # The count alone is not enough: a round-robin repartition(n)
+            # has the right count and still needs the exchange.
             aligned, owned = fids, False
         else:
             aligned, owned = fids.repartition(n, "salt").persist(), True
@@ -429,7 +488,10 @@ class IndexReader:
         - ``filter_doc_ids``: one sorted array shipped with the closure to
           every slice.
 
-        ``fn`` must not close over the reader (it is pickled into tasks)."""
+        ``fn`` must not close over the reader (it is pickled into tasks). An
+        exception in ``fn`` surfaces as :class:`KernelError` naming the salt,
+        the kernel and the slice's terms."""
+        fn = _naming_slice(fn)
         if filter_df is not None:
             fids = self._aligned_filter(filter_df)
             empty = _empty_frame(schema)
@@ -679,11 +741,7 @@ class IndexReader:
         Uses the lean docs table (no doc_len sidecar join) unless the caller
         asked for doc_len — keeps the fetch plan a single broadcast join."""
         cols = fields or ["repo", "path", "commit", "lang"]
-        docs = (
-            self.docs
-            if "doc_len" in cols
-            else read_docs(self.spark, self.index_dir, with_len=False)
-        )
+        docs = self.docs if "doc_len" in cols else self.lean_docs
         return (
             docs.join(F.broadcast(topk), "doc_id")
             .select("doc_id", "score", *cols)

@@ -53,7 +53,8 @@ names — the same honest-gate contract as sources/minixslt.py.
 Execution is pure DataFrame algebra over per-clause retrievals — each text
 clause is an indexed posting read (bounded by its df), each metadata clause
 a pushed-down filter on the docs table, contributions union into one hash
-aggregation, domain restriction is semi/anti joins on doc_id. No
+aggregation that sums the scores and counts the MUST matches per doc (the
+MUST domain), MUST_NOT exclusion is an anti-join on doc_id. No
 driver-side doc loops; at cluster scale every step is a bounded shuffle
 keyed on doc_id.
 """
@@ -378,9 +379,7 @@ def _clause_scored(reader, cl: Clause) -> DataFrame | None:
         # pushed-down parquet scan; memoized per (field, value) on the
         # reader (the docs table is immutable after build — same contract
         # as the termdf sidecar cache).
-        cache = getattr(reader, "_field_df_cache", None)
-        if cache is None:
-            cache = reader._field_df_cache = {}
+        cache = reader._field_df_cache
         key = (cl.field_name, cl.text)
         df_v = cache.get(key)
         if df_v is None:
@@ -449,7 +448,18 @@ def _node_matches(reader, node) -> DataFrame | None:
 
 def _exec_nodes(reader, nodes: list) -> DataFrame | None:
     """BooleanQuery algebra over one nesting level → (doc_id, score) of ALL
-    matching docs, or None when the level can match nothing."""
+    matching docs, or None when the level can match nothing.
+
+    One aggregation does both the score and the MUST domain: every
+    contribution carries ``must`` = 1 for a MUST node (0 for SHOULD), and
+    ``groupBy(doc_id)`` sums both, keeping the docs whose MUST count equals
+    the number of MUST nodes. This counts each MUST once per doc because a
+    node's frame has unique doc_ids (salt slices are disjoint and every
+    kernel emits a doc at most once per slice), the same property the score
+    sum relies on. Each clause's per-salt kernel thus runs once per action;
+    a separate semi-join per MUST would run it again. With no MUST, the
+    union already holds only docs where ≥1 SHOULD matched. MUST_NOT nodes
+    are anti-joins."""
     musts = [n for n in nodes if n.occur == MUST]
     shoulds = [n for n in nodes if n.occur == SHOULD]
     nots = [n for n in nodes if n.occur == MUST_NOT]
@@ -457,28 +467,27 @@ def _exec_nodes(reader, nodes: list) -> DataFrame | None:
         return None  # Lucene: no positive clause → no hits
 
     contribs: list[DataFrame] = []
-    must_domains: list[DataFrame] = []
     for n in musts:
         df = _node_scored(reader, n)
         if df is None:
             return None  # a MUST node that can't match → empty result
-        contribs.append(df)
-        must_domains.append(df.select("doc_id"))
+        contribs.append(df.withColumn("must", F.lit(1)))
     for n in shoulds:
         df = _node_scored(reader, n)
         if df is not None:
-            contribs.append(df)
+            contribs.append(df.withColumn("must", F.lit(0)))
     if not contribs:
         return None
 
     scored = contribs[0]
     for df in contribs[1:]:
         scored = scored.unionByName(df)
-    scored = scored.groupBy("doc_id").agg(F.sum("score").alias("score"))
-    # domain: every MUST present. With no MUST, the union already contains
-    # only docs where ≥1 SHOULD matched.
-    for dom in must_domains:
-        scored = scored.join(dom, "doc_id", "leftsemi")
+    scored = (
+        scored.groupBy("doc_id")
+        .agg(F.sum("score").alias("score"), F.sum("must").alias("must"))
+        .filter(F.col("must") == len(musts))
+        .drop("must")
+    )
     for n in nots:
         nd = _node_matches(reader, n)
         if nd is not None:

@@ -1566,3 +1566,46 @@ def test_lucene_fq_failure_chains_sql_error(engine):
         engine.search(model, {"query": "posting",
                               "raw_fq": {"raw": 'lang:(py AND'}})
     assert ei.value.__cause__ is not None  # the SQL rejection is chained
+
+
+def _jobs_of(spark, group: str, fn):
+    """(fn's result, ids of the Spark jobs it launched) via a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_boolean_request_job_floor(spark, engine):
+    """Job-count pin for one Layer-B boolean request with an fq and a facet:
+    each clause kernel runs once per request (the MUST domain is counted in
+    the score aggregation, and top-k, numFound and the facet domain share one
+    persisted match set), so the request launches at most 16 Spark jobs. It
+    launched 27 when the semi-joins and numFound re-ran the kernels."""
+    req = {"query": '+posting +"posting segment"', "filter": {"lang": "py"},
+           "facet": ["lang"]}
+    engine.search(MODEL, dict(req))  # warm: filterCache entry, memoized reads
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    rsp, jobs = _jobs_of(spark, "boolean-floor",
+                         lambda: engine.search(MODEL, dict(req)))
+    assert rsp["response"]["numFound"] > 0
+    assert len(jobs) <= 16, jobs
+    # the request's persisted match set and facet domain are released
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_fetch_launches_no_listing_job(spark, engine):
+    """A second scored request's stored-field fetch is built without a Spark
+    job: the reader memoizes the lean docs frame, so ``docs.parquet`` is not
+    listed and its footers are not re-read per request."""
+    reader = engine.reader
+    topk = reader.search("posting", 3)
+    reader.fetch(topk)
+    hits, jobs = _jobs_of(spark, "fetch-build", lambda: reader.fetch(topk))
+    assert jobs == []
+    assert [r["doc_id"] for r in hits.collect()] == \
+        [r["doc_id"] for r in topk.collect()]

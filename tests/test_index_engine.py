@@ -722,3 +722,51 @@ def test_cache_for_serving_new_partition_count_realigns_filters(spark, index_dir
     finally:
         first_index.unpersist()
         reader.index.unpersist()
+
+
+def test_kernel_error_names_its_slice(spark, index_dir):
+    """A kernel that raises inside ``search`` surfaces an error naming the
+    salt, the kernel and the slice's terms. Here candidate rows for a term
+    the query's idf map lacks make ``wand.topk_rows`` raise KeyError."""
+    reader = IndexReader(spark, index_dir)
+    orig = reader._candidate_rows
+    reader._candidate_rows = lambda terms: orig([*terms, "segment"])
+    with pytest.raises(Exception) as err:
+        reader.search("posting", 5).collect()
+    text = str(err.value)
+    assert "KernelError" in text and "salt=" in text, text
+    assert "IndexReader.search.<locals>.kernel" in text, text
+    assert "'segment'" in text and "KeyError" in text, text
+
+
+def test_aligned_filter_realigns_round_robin_frame(spark, index_dir):
+    """A filter with the serving partition count but round-robin layout
+    (``repartition(n)``) is not taken as aligned: the reader re-partitions
+    it by salt, so the filtered search runs no per-query Exchange
+    (ENSURE_REQUIREMENTS) below its cogroup in the final adaptive plan, and
+    returns the driver-list answer. The cached frames' own one-time
+    exchanges stay in the plan text."""
+    reader = IndexReader(spark, index_dir).cache_for_serving()
+    try:
+        n = reader._serving_partitions
+        allowed = [d for d in range(N_DOCS) if d % 3 == 0]
+        fdf = reader.salted_filter(
+            spark.createDataFrame([(d,) for d in allowed], "doc_id long")
+        ).repartition(n).persist()
+        fdf.count()
+        assert fdf.rdd.getNumPartitions() == n
+        qtext = "posting segment lucene"
+        df = reader.search(qtext, 10, filter_df=fdf)
+        got = [(r["doc_id"], r["score"]) for r in df.collect()]
+        exp = [(r["doc_id"], r["score"])
+               for r in reader.search(qtext, 10, filter_doc_ids=allowed).collect()]
+        assert got == exp
+        assert reader._filter_align_cache[id(fdf)].owned
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("\n+- == Initial Plan ==", 1)[0]
+        below = final.split("FlatMapCoGroupsInPandas", 1)[1]
+        assert "ENSURE_REQUIREMENTS" not in below, plan
+        fdf.unpersist()
+    finally:
+        reader._drop_aligned_filters()
+        reader.index.unpersist()

@@ -22,6 +22,8 @@ from solrutils_spark.query.qparser import (
     SHOULD,
     Group,
     UnsupportedQuerySyntax,
+    _node_scored,
+    boolean_scored,
     execute_boolean,
     parse_query,
 )
@@ -355,6 +357,87 @@ def test_boolean_matches_oracle(reader, oracle, meta, q):
     want = _oracle_boolean(oracle, q, 10, meta)
     assert [d for d, _ in got] == [d for d, _ in want], q
     assert np.allclose([s for _, s in got], [s for _, s in want], atol=1e-9), q
+
+
+ATOMS = ["posting", "segment", "wand", "lucene", "vbyte", "zzzabsent",
+         '"posting segment"', "post*"]
+LANGS = ["py", "go", "rs", "zzznope"]
+OCCURS = ["+", "", "-"]
+
+
+def _scoring_frames(reader, nodes):
+    """``_node_scored`` of every MUST/SHOULD node, nested groups' too."""
+    for n in nodes:
+        if n.occur == MUST_NOT:
+            continue
+        df = _node_scored(reader, n)
+        if df is not None:
+            yield df
+        if isinstance(n, Group):
+            yield from _scoring_frames(reader, n.children)
+
+
+def test_full_match_set_matches_oracle_property(reader, oracle, meta):
+    """Property: the FULL match set (BOOL_QUERIES check a top 10) of random
+    1-4 node queries — MUST, SHOULD and MUST_NOT mixed, at most one nested
+    group and one ``lang:`` clause — equals the oracle's: the same doc ids,
+    scores within 1e-9. The MUST domain is a count inside the score
+    aggregation, which holds only while every node frame carries each
+    doc_id once; that is asserted too."""
+    from hypothesis import example, given, settings
+    from hypothesis import strategies as st
+
+    n_docs = reader.stats["n_docs"]
+
+    @st.composite
+    def queries(draw):
+        n = draw(st.integers(1, 4))
+        kinds = ["atom"] * n
+        slots = draw(st.permutations(range(n)))
+        if draw(st.booleans()):
+            kinds[slots[0]] = "group"
+        if n > 1 and draw(st.booleans()):
+            kinds[slots[1]] = "lang"
+        parts = []
+        for kind in kinds:
+            if kind == "group":
+                inner = draw(st.lists(
+                    st.tuples(st.sampled_from(OCCURS), st.sampled_from(ATOMS)),
+                    min_size=1, max_size=2))
+                body = "(" + " ".join(o + a for o, a in inner) + ")"
+            elif kind == "lang":
+                body = "lang:" + draw(st.sampled_from(LANGS))
+            else:
+                body = draw(st.sampled_from(ATOMS))
+            parts.append(draw(st.sampled_from(OCCURS)) + body)
+        return " ".join(parts)
+
+    # derandomized: the same examples on every run; the explicit one has
+    # two MUST nodes that most docs match only one of
+    @settings(max_examples=25, deadline=None, derandomize=True)
+    @given(queries())
+    @example('+"posting segment" +lang:py wand')
+    def check(q):
+        got = {r["doc_id"]: r["score"]
+               for r in execute_boolean(reader, q, n_docs).collect()}
+        want = dict(_oracle_boolean(oracle, q, n_docs, meta))
+        assert set(got) == set(want), q
+        assert all(abs(got[d] - s) <= 1e-9 for d, s in want.items()), q
+        for df in _scoring_frames(reader, parse_query(q)):
+            dup = df.groupBy("doc_id").count().filter("count > 1").limit(1)
+            assert not dup.collect(), q
+
+    check()
+
+
+def test_boolean_scored_runs_each_clause_kernel_once(reader):
+    """Plan pin: ``+posting +"posting segment"`` has exactly one Python
+    kernel stage per scoring clause. The MUST domain is counted in the score
+    aggregation; a semi-join per MUST would evaluate each clause again."""
+    assert reader.has_positions()  # the phrase clause is a per-salt kernel
+    df = boolean_scored(reader, '+posting +"posting segment"')
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FlatMapGroupsInPandas") == 2, plan
 
 
 def test_boolean_and_equals_search_conj(reader):
